@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Streaming freshness measurement at scale: replay a corpus as a CDC
-  * micro-batch stream through the incremental FTS maintenance path and
+  * micro-batch stream through the segment-append FTS maintenance path and
   * record WRITE-TO-SEARCHABLE lag per batch — the reference's freshness
   * envelope (BASELINE.md: fine reader 100 ms / wide 30 s cadence, FTS
   * commit loop targets <3 s from write to searchable,
@@ -18,32 +18,27 @@ import org.apache.spark.sql.functions._
   * searchable (a BM25 hit for a term unique to that batch) and its extra
   * wall time is reported separately.
   *
-  * Usage: StreamLag [sfDir] [nBatches] [outFile] [nBuckets=64] [mode=bucket]
-  *                  [maxSegments=0] [store=fts]
+  * Usage: StreamLag [sfDir] [nBatches] [outFile] [maxSegments=0] [store=fts]
+  * The FTS store commits via [[IndexMaintenance.appendFtsSegment]] —
+  * O(batch) per commit regardless of accumulated corpus — and the probe
+  * reads through [[IndexMaintenance.readFtsSegmentIndex]]'s reconciled
+  * view.
   * store=vs drives the vector/LSH segment store (the serving-critical
   * kind) over the embeddings table — see [[runVs]].
-  * store=dedup (segment mode only) drives the MinHash dedup segment store
-  * instead: same CDC replay, same compaction policy, and the per-batch
-  * SEARCHABLE proof is a [[graft.operators.Dedup.nearDupProbe]] of the
-  * batch's marker doc (an exact duplicate of a batch-0 reference) finding
-  * its near-dup pair through the reconciled store — the policy evidence
-  * VERDICT r10 #4 asked for on a second LIVE store kind, not just specs.
-  * nBuckets trades bucket-pruned read granularity against per-commit
-  * directory-rewrite overhead: when every batch touches every bucket (batch
-  * cardinality >> buckets), fewer buckets = fewer per-commit renames.
-  * mode=segment commits via [[IndexMaintenance.appendFtsSegment]] instead —
-  * O(batch) per commit regardless of accumulated corpus (the bucket
-  * rewrite is O(store) once batches spray all buckets, measured as lag
-  * that grows with the corpus); the probe then reads through
-  * [[IndexMaintenance.readFtsSegmentIndex]]'s reconciled view.
-  * maxSegments > 0 (segment mode) wires [[IndexMaintenance.withCompaction]]
+  * store=dedup drives the MinHash dedup segment store instead: same CDC
+  * replay, same compaction policy, and the per-batch SEARCHABLE proof is a
+  * [[graft.operators.Dedup.nearDupProbe]] of the batch's marker doc (an
+  * exact duplicate of that batch's reference doc) finding its near-dup
+  * pair through the reconciled store.
+  * maxSegments > 0 wires [[IndexMaintenance.withCompaction]]
   * around the writer — the auto-compaction cadence whose long-horizon
   * effect (~100 batches) this harness exists to measure: without it the
   * reconcile's input grows one segment per batch and probe_sec drifts up;
   * with it probe_sec stays flat and the lag series shows the fold
   * sawtooth (amortized, bounded spikes).
   * Prints ONE JSON line: per-batch lag seconds, p50/p95/max, probe cost,
-  * per-batch segment counts (segment mode).
+  * per-batch segment counts (`"mode":"segment"` is kept so the output
+  * stays comparable with earlier STREAMLAG artifacts).
   */
 object StreamLag {
 
@@ -80,14 +75,14 @@ object StreamLag {
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[VecEv](spark)
     val append = IndexMaintenance.appendVsSegment(
       spark, p("vs"), "vec_id", "embedding", opCol = None, dims, nbits)
-    val merge = if (maxSegments > 0)
+    val commit = if (maxSegments > 0)
       IndexMaintenance.withCompaction(
         spark, p("vs"), IndexMaintenance.CompactionPolicy(maxSegments),
         () => IndexMaintenance.compactVsSegments(spark, p("vs"), "vec_id"))(append)
     else append
     val q = mem.toDF().writeStream
       .foreachBatch(StreamingIngest.withCdcMetrics(
-        eng, "ks", "vs", "realtime", tsCol = "ts")(merge))
+        eng, "ks", "vs", "realtime", tsCol = "ts")(commit))
       .option("checkpointLocation", p("ckpt"))
       .start()
     StreamingIngest.bindReaderLiveness(eng, q, "ks", "vs", "realtime")
@@ -165,47 +160,34 @@ object StreamLag {
     def p(n: String) = new java.io.File(dir, n).getAbsolutePath
     val eng = new graft.operators.Engine
     val mem = MemoryStream[DocEv](spark)
-    val nBuckets = args.lift(3).map(_.toInt).getOrElse(64)
-    val mode = args.lift(4).getOrElse("bucket")
-    val maxSegments = args.lift(5).map(_.toInt).getOrElse(0)
-    val store = args.lift(6).getOrElse("fts")
-    require(store == "fts" || store == "vs" ||
-      (store == "dedup" && mode == "segment"),
-      "store=dedup is segment-mode only; stores: fts | dedup | vs")
+    val maxSegments = args.lift(3).map(_.toInt).getOrElse(0)
+    val store = args.lift(4).getOrElse("fts")
+    require(Set("fts", "dedup", "vs")(store), s"unknown store $store; stores: fts | dedup | vs")
     if (store == "vs") { // vector-store replay has its own event schema
       runVs(spark, sfDir, nBatches, outFile, maxSegments)
       return
     }
     val segCounts = Array.ofDim[Int](nBatches)
     val claimsPath = if (store == "dedup") p("sigs") else p("doclens")
-    val merge = (mode, store) match {
-      case ("segment", "dedup") =>
-        val append = IndexMaintenance.appendDedupSegment(
-          spark, p("shingles"), p("sigs"), "doc_id", "text", opCol = None)
-        if (maxSegments > 0)
-          IndexMaintenance.withCompaction(
-            spark, claimsPath,
-            IndexMaintenance.CompactionPolicy(maxSegments),
-            () => IndexMaintenance.compactDedupSegments(
-              spark, p("shingles"), p("sigs"), "doc_id"))(append)
-        else append
-      case ("segment", _) =>
-        val append = IndexMaintenance.appendFtsSegment(
-          spark, p("postings"), p("doclens"), "doc_id", "text", opCol = None)
-        if (maxSegments > 0)
-          IndexMaintenance.withCompaction(
-            spark, claimsPath,
-            IndexMaintenance.CompactionPolicy(maxSegments),
-            () => IndexMaintenance.compactFtsSegments(
-              spark, p("postings"), p("doclens"), "doc_id"))(append)
-        else append
-      case _ => IndexMaintenance.mergeFtsBatch(
-        spark, p("postings"), p("doclens"), "doc_id", "text", opCol = None,
-        nBuckets = nBuckets)
-    }
+    val (append, compact) =
+      if (store == "dedup")
+        (IndexMaintenance.appendDedupSegment(
+          spark, p("shingles"), p("sigs"), "doc_id", "text", opCol = None),
+          () => IndexMaintenance.compactDedupSegments(
+            spark, p("shingles"), p("sigs"), "doc_id"))
+      else
+        (IndexMaintenance.appendFtsSegment(
+          spark, p("postings"), p("doclens"), "doc_id", "text", opCol = None),
+          () => IndexMaintenance.compactFtsSegments(
+            spark, p("postings"), p("doclens"), "doc_id"))
+    val commit =
+      if (maxSegments > 0)
+        IndexMaintenance.withCompaction(spark, claimsPath,
+          IndexMaintenance.CompactionPolicy(maxSegments), compact)(append)
+      else append
     val q = mem.toDF().writeStream
       .foreachBatch(StreamingIngest.withCdcMetrics(
-        eng, "ks", "fts", "realtime", tsCol = "ts")(merge))
+        eng, "ks", "fts", "realtime", tsCol = "ts")(commit))
       .option("checkpointLocation", p("ckpt"))
       .start()
     StreamingIngest.bindReaderLiveness(eng, q, "ks", "fts", "realtime")
@@ -248,10 +230,9 @@ object StreamLag {
           DocEv(id, tx, new java.sql.Timestamp(t0)) }.toSeq ++ ref :+ marker)
         q.processAllAvailable() // commit = indexed
         lags(b) = (System.currentTimeMillis() - t0) / 1000.0
-        if (mode == "segment") { // live fts_segment_count (the sawtooth)
-          segCounts(b) = IndexMaintenance.ftsSegmentCount(spark, claimsPath)
-          eng.setSegmentCount("ks", "fts", segCounts(b))
-        }
+        // live fts_segment_count (the sawtooth)
+        segCounts(b) = IndexMaintenance.ftsSegmentCount(spark, claimsPath)
+        eng.setSegmentCount("ks", "fts", segCounts(b))
         val tp = System.currentTimeMillis()
         if (store == "dedup") {
           import graft.operators.Dedup
@@ -269,11 +250,8 @@ object StreamLag {
           require(hits.contains((markerId, refId)),
             s"batch $b planted duplicate pair ($markerId, $refId) not found after commit")
         } else {
-          val pos =
-            if (mode == "segment") IndexMaintenance.readFtsSegmentIndex(
-              spark, p("postings"), p("doclens"), "doc_id")
-            else IndexMaintenance.readFtsIndex(
-              spark, p("postings"), p("doclens"), "doc_id")
+          val pos = IndexMaintenance.readFtsSegmentIndex(
+            spark, p("postings"), p("doclens"), "doc_id")
           val hit = graft.operators.Bm25.scoreAll(
               graft.operators.Bm25.Index(
                 pos.postings.select("doc_id", "term", "tf"), pos.docLens, "doc_id"),
@@ -289,16 +267,14 @@ object StreamLag {
 
     val sorted = lags.sorted
     def pct(q: Double) = sorted(math.min(sorted.length - 1, (q * sorted.length).toInt))
-    val segJson = if (mode == "segment")
-      s""","max_segments":$maxSegments,"segments":[${segCounts.mkString(",")}]"""
-    else ""
     val json =
-      s"""{"metric":"${store}_write_to_searchable","unit":"sec","mode":"$mode",""" +
+      s"""{"metric":"${store}_write_to_searchable","unit":"sec","mode":"segment",""" +
         s""""batches":$nBatches,""" +
         s""""docs_per_batch":$perBatch,"p50":${fmt(pct(0.5))},""" +
         s""""p95":${fmt(pct(0.95))},"max":${fmt(sorted.last)},""" +
         s""""per_batch":[${lags.map(fmt).mkString(",")}],""" +
-        s""""probe_sec":[${probes.map(fmt).mkString(",")}]$segJson}"""
+        s""""probe_sec":[${probes.map(fmt).mkString(",")}],""" +
+        s""""max_segments":$maxSegments,"segments":[${segCounts.mkString(",")}]}"""
     println(json)
     outFile.foreach { f =>
       java.nio.file.Files.write(java.nio.file.Paths.get(f), json.getBytes("UTF-8"))

@@ -227,13 +227,13 @@ final class Engine {
     servingBackends.get(IndexKey(keyspace, index)).map(_.name).getOrElse("exact")
 
   // ---- store fence (commit visibility) -------------------------------------
-  // The maintenance writers replace bucket directories / fold segments
-  // OUTSIDE any commit protocol (IndexMaintenance.overwriteBuckets,
-  // compact*Segments document the contract in prose). This fence makes the
-  // contract ENFORCEABLE at the serving layer: commits take the write
-  // side, serving ACTIONS take the read side — a mid-commit scan either
-  // ran entirely before the rewrite or waits for it, never observing a
-  // half-replaced directory. Fair mode: a waiting commit blocks NEW reads,
+  // The maintenance writers append segment directories and the compactors
+  // fold them OUTSIDE any commit protocol (IndexMaintenance.compact*Segments
+  // document the contract in prose). This fence makes the contract
+  // ENFORCEABLE at the serving layer: commits take the write side, serving
+  // ACTIONS take the read side — a mid-commit scan either ran entirely
+  // before the commit or waits for it, never observing a half-written
+  // segment or a half-folded store. Fair mode: a waiting commit blocks NEW reads,
   // so maintenance is not starved by a steady query stream.
   private val storeFences =
     new java.util.concurrent.ConcurrentHashMap[
@@ -242,7 +242,7 @@ final class Engine {
     storeFences.computeIfAbsent(key,
       _ => new java.util.concurrent.locks.ReentrantReadWriteLock(true))
 
-  /** Run a maintenance commit (bucket rewrite, segment fold) against the
+  /** Run a maintenance commit (segment append, segment fold) against the
     * index's store under the WRITE side of the store fence. */
   def withMaintenance[T](keyspace: String, index: String)(commit: => T): T = {
     val l = fence(IndexKey(keyspace, index)).writeLock()

@@ -50,7 +50,7 @@ object IndexStorage {
     * Format-agnostic — the JSONL store reuses it with a json writer.
     *
     * Fingerprint and marker I/O go through Hadoop FS like the sibling
-    * [[exists]]/[[hasData]]/[[deleteRecursive]] helpers: on an HDFS/S3
+    * [[hasData]]/[[listDirs]]/[[deleteRecursive]] helpers: on an HDFS/S3
     * store path a `java.io.File` probe silently answers false, which
     * would rebuild the store on EVERY run — the exact bug this method
     * exists to prevent. The Hadoop conf comes from the active session
@@ -93,20 +93,12 @@ object IndexStorage {
     * stderr markers. */
   val rebuilds = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Hadoop-FS existence probe. State/index paths live on HDFS/S3 in a real
-    * deployment, where `java.io.File` silently answers false — which would
-    * make every maintenance batch re-bootstrap instead of merging. All
-    * maintenance-path existence checks go through here. */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** True when the store path holds at least one parquet data file. A store
     * whose every row was deleted keeps its directory (markers/_SUCCESS) but
     * no part-files — `spark.read.parquet` on it fails schema inference, so
     * readers that survive a delete-everything epoch must probe THIS, not
-    * bare [[exists]]. */
+    * bare directory existence. Hadoop-FS, so the probe answers correctly on
+    * HDFS/S3 where `java.io.File` silently answers false. */
   def hasData(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -129,7 +121,7 @@ object IndexStorage {
   }
 
   /** Hadoop-FS recursive delete (no-op when absent) — same rationale as
-    * [[exists]]: bucket-directory cleanup must work on HDFS/S3, not only on
+    * [[hasData]]: segment-directory cleanup must work on HDFS/S3, not only on
     * the local filesystem. */
   def deleteRecursive(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)

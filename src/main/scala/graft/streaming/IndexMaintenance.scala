@@ -4,72 +4,30 @@ import graft.operators.Bm25
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Incremental maintenance of materialized FTS index stores from a change
+/** Incremental maintenance of materialized index stores from a change
   * stream (SURVEY §2.8 ST6 — commit batching; §3.3 step 4).
   *
   * The reference keeps its tantivy index continuously updated from CDC and
   * commits every 3 s (fts_index/tantivy.rs:129-130: IndexWriter commit loop;
-  * doc delete+re-add per updated row). The Spark-native equivalent: the
-  * postings/doc-length parquet stores are directory-partitioned by a pk-hash
-  * bucket, and each micro-batch
-  *  1. computes the buckets its doc ids touch,
-  *  2. partition-prunes the store read to those buckets,
-  *  3. drops every posting of a touched doc (upsert = replace, delete = drop),
-  *  4. unions freshly analyzed postings for the upserted docs, and
-  *  5. rewrites ONLY the touched bucket directories (dynamic overwrite).
-  * Per-batch cost is O(changed docs + their buckets), not O(corpus) — the
-  * property that keeps a 100 TB postings store maintainable by a CDC trickle.
+  * each commit seals an immutable segment, merges fold segments later).
+  * Every store kind here has that one commit shape, as a writer / reader /
+  * compactor triple:
+  *  - the writer (`append*Segment`, a foreachBatch body) appends the batch
+  *    as one new `_seg=<id>` directory — O(batch) work, earlier segments
+  *    are never read or rewritten; a delete writes a tombstone claim; a
+  *    replayed batch replaces its own rows in its segment instead of
+  *    adding a second copy;
+  *  - the reader (`read*Segment*`) reconciles latest-claim-wins per id
+  *    across the live segments;
+  *  - the compactor (`compact*Segments`, on a [[CompactionPolicy]] cadence
+  *    via [[withCompaction]]) folds history into one segment.
+  * Store kinds: FTS postings, MinHash dedup, LSH vector, IVF, IVFADC, flat
+  * PQ, span windows, line relation and the LWW row snapshot.
   *
   * Events are assumed LWW-compacted per doc id (compose with
   * [[graft.operators.Lww.compactState]] upstream for out-of-order streams).
   */
 object IndexMaintenance {
-
-  val BucketCol = "_bkt"
-
-  /** foreachBatch writer: merge a micro-batch of document upserts/deletes
-    * into the positional-postings and doc-length stores at the given paths.
-    *
-    * @param opCol optional operation column; value `DELETE` (or a null
-    *              `textCol`) removes the document from the index
-    * @param nBuckets bucket count — size so one bucket is a comfortable
-    *                 task read at the target corpus size */
-  def mergeFtsBatch(
-      spark: SparkSession,
-      postingsPath: String,
-      docLensPath: String,
-      idCol: String,
-      textCol: String,
-      opCol: Option[String],
-      nBuckets: Int = 64): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, _: Long) =>
-      val bucket = pmod(xxhash64(col(idCol)), lit(nBuckets.toLong)).cast("int")
-      val isDelete = {
-        // coalesce: a NULL op must not three-valued-null the predicate — an
-        // event with a missing op but live text is an upsert, not a delete
-        val op = opCol.map(c => coalesce(upper(col(c)) === "DELETE", lit(false)))
-          .getOrElse(lit(false))
-        op || col(textCol).isNull
-      }
-      val upserts = batch.filter(!isDelete)
-      val touchedIds = batch.select(col(idCol)).distinct()
-      val fresh = Bm25.buildPositionalIndex(upserts, idCol, textCol)
-
-      mergeKeyed(spark, postingsPath, idCol, touchedIds, fresh.postings, bucket, nBuckets)
-      mergeKeyed(spark, docLensPath, idCol, touchedIds, fresh.docLens, bucket, nBuckets)
-  }
-
-  /** Read the maintained stores back as a queryable [[Bm25.PosIndex]] (the
-    * postings double as tf postings — see SparkEntry.bm25Stores). */
-  def readFtsIndex(
-      spark: SparkSession, postingsPath: String, docLensPath: String,
-      idCol: String): Bm25.PosIndex =
-    Bm25.PosIndex(
-      spark.read.parquet(postingsPath).drop(BucketCol),
-      spark.read.parquet(docLensPath).drop(BucketCol),
-      idCol)
-
-  // ---- segment-append FTS maintenance (the tantivy/LSM commit shape) ----
 
   val SegCol = "_seg"
 
@@ -79,13 +37,9 @@ object IndexMaintenance {
     * all live segments; merges amortize in the background — the surface our
     * `fts_segment_count` metric family mirrors).
     *
-    * [[mergeFtsBatch]]'s bucket rewrite is O(touched buckets); when a
-    * batch's keys spray every bucket (any realistic CDC batch), that is
-    * O(accumulated store) per commit — measured as a per-batch lag that
-    * GROWS as the corpus accumulates (PERF.md round 9). This writer is the
-    * scale cure: each batch appends one new `_seg=<id>` directory of
-    * postings + doc lengths — strictly O(batch) work, never touching
-    * earlier segments — and deletes/upserts are reconciled AT READ by a
+    * Each batch appends one new `_seg=<id>` directory of postings + doc
+    * lengths — strictly O(batch) work, never touching earlier segments —
+    * and deletes/upserts are reconciled AT READ by a
     * per-doc latest-segment rule ([[readFtsSegmentIndex]]): a delete (or
     * null text) writes a tombstone doc-length row (dl = −1) claiming the
     * doc in this segment with no postings. Write cost is therefore
@@ -97,7 +51,7 @@ object IndexMaintenance {
     * same store under a NEW query (batchId restarts at 0) must pass the
     * previous lifetime's ceiling as `segOffset`, or older claims would win.
     *
-    * Events are assumed LWW-compacted per doc id, as [[mergeFtsBatch]]. */
+    * Events are assumed LWW-compacted per doc id. */
   def appendFtsSegment(
       spark: SparkSession,
       postingsPath: String,
@@ -114,15 +68,47 @@ object IndexMaintenance {
       val lens = fresh.docLens.unionByName(
         batch.filter(isDelete).select(col(idCol), lit(-1).as("dl")))
       val seg = segOffset + batchId
-      appendSeg(postingsPath, fresh.postings, seg)
-      appendSeg(docLensPath, lens, seg)
+      commitSeg(postingsPath, fresh.postings, idCol, seg)
+      commitSeg(docLensPath, lens, idCol, seg)
   }
 
-  /** Append one immutable segment directory — the only write a
-    * segment-mode commit performs. */
-  private def appendSeg(path: String, df: DataFrame, seg: Long): Unit =
+  /** Append one immutable segment directory. Only the LWW snapshot
+    * commits with it directly: its read picks one of two identical rows,
+    * so a replayed copy changes no answer. Id-keyed stores commit through
+    * [[commitSeg]]. */
+  private def appendSeg(
+      path: String, df: DataFrame, seg: Long,
+      cellCols: Seq[String] = Nil): Unit =
     df.withColumn(SegCol, lit(seg))
-      .write.mode("append").partitionBy(SegCol).parquet(path)
+      .write.mode("append").partitionBy(SegCol +: cellCols: _*).parquet(path)
+
+  /** Commit one batch's rows of an id-keyed store as segment `seg`. A new
+    * segment id is a plain [[appendSeg]]: O(batch), earlier segments
+    * untouched. Segment ids are monotonic, so a segment directory that
+    * already holds data means a REPLAY of this batch (foreachBatch delivers
+    * at least once). Its earlier attempt left all, part or none of the
+    * batch's rows there, or a fold at this ceiling folded the whole store
+    * into it. Either way, the batch's ids are replaced inside that one
+    * segment, so a re-run adds no second copy a reconcile would keep.
+    * Under a fold each replayed id's folded row IS its row of this batch,
+    * the latest claim. A replay rewrites that one segment. */
+  private def commitSeg(
+      path: String, df: DataFrame, idCol: String, seg: Long,
+      cellCols: Seq[String] = Nil): Unit = {
+    val spark = df.sparkSession
+    val segDir = s"$path/$SegCol=$seg"
+    if (!graft.sources.IndexStorage.hasData(spark, segDir))
+      appendSeg(path, df, seg, cellCols)
+    else {
+      // cell values come back as partition-inferred ints
+      val prior = cellCols.foldLeft(
+          spark.read.option("basePath", path).parquet(segDir).drop(SegCol)) {
+          (d, c) => d.withColumn(c, col(c).cast(df.schema(c).dataType))
+        }
+        .join(df.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
+      overwriteCeiling(path, prior.unionByName(df), seg, cellCols)
+    }
+  }
 
   /** Per-id winning claims: the row with the highest segment id. `claims`
     * must hold exactly one row per id per touching segment. */
@@ -183,7 +169,11 @@ object IndexMaintenance {
       out.drop(SegCol +: cellCols: _*).repartition(1)
         .write.mode("overwrite").parquet(s"$path/$leaf")
     } else {
-      out.write.mode("overwrite")
+      // one task per cell dir, as IndexStorage.writePartitioned does: an
+      // unclustered fold wrote tasks × cells files, and every later read
+      // lists and opens them all
+      (if (cellCols.isEmpty) out else out.repartition(cellCols.map(col): _*))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(SegCol +: cellCols: _*).parquet(path)
       // a dynamic overwrite only replaces cell dirs PRESENT in the folded
@@ -299,8 +289,10 @@ object IndexMaintenance {
     * rewrite, exactly a tantivy merge; run it on a cadence (or a
     * segment-count threshold) from the maintenance scheduler.
     *
-    * Same commit-visibility contract as [[overwriteBuckets]]: run against a
-    * quiesced store (between micro-batches). */
+    * COMMIT VISIBILITY CONTRACT: the fold replaces the ceiling segment and
+    * deletes older ones outside any commit protocol, so run it against a
+    * quiesced store (between micro-batches) and serve reads under the
+    * engine's store fence ([[graft.operators.Engine.withMaintenance]]). */
   def compactFtsSegments(
       spark: SparkSession, postingsPath: String, docLensPath: String,
       idCol: String): Unit = {
@@ -308,14 +300,14 @@ object IndexMaintenance {
     compactPair(spark, postingsPath, docLensPath, idx.postings, idx.docLens)
   }
 
-  /** Segment-append twin of [[mergeDedupBatch]] — the same tantivy/LSM
-    * commit shape for the MinHash dedup stores: each batch appends one
-    * `_seg=<id>` directory of fresh shingles (values) and signatures
-    * (claims — exactly one row per touched doc; a delete claims the doc
-    * with NULL signature columns and no shingle rows). O(batch) per
-    * commit; [[readDedupSegmentIndex]] reconciles latest-claim-wins at
-    * read; [[compactDedupSegments]] folds history. Same monotonic-segment
-    * contract as [[appendFtsSegment]]. */
+  /** Segment-append writer for the MinHash dedup stores
+    * ([[graft.operators.Dedup.minhashNearDupsFromStores]]'s input): each
+    * batch appends one `_seg=<id>` directory of fresh shingles (values)
+    * and signatures (claims — exactly one row per touched doc; a delete
+    * claims the doc with NULL signature columns and no shingle rows).
+    * O(batch) per commit; [[readDedupSegmentIndex]] reconciles
+    * latest-claim-wins at read; [[compactDedupSegments]] folds history.
+    * Same monotonic-segment contract as [[appendFtsSegment]]. */
   def appendDedupSegment(
       spark: SparkSession,
       shinglePath: String,
@@ -328,31 +320,39 @@ object IndexMaintenance {
       segOffset: Long = 0L): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
       import graft.operators.Dedup
-      val isDelete = dedupIsDelete(textCol, opCol)
       val freshShingles = Dedup.shingles(
-          batch.filter(!isDelete), idCol, textCol, shingleN)
+          batch.filter(!dedupIsDelete(textCol, opCol)), idCol, textCol, shingleN)
         .localCheckpoint(true) // one tokenize pass feeds both stores
-      val freshSigs =
-        Dedup.minhashSignaturesFromShingles(freshShingles, idCol, numHashes)
-      // EVERY batch event must claim its doc in this segment, or the doc's
-      // older claim keeps winning at read. Deletes have no signature by
-      // construction — and so does an UPSERT whose new text yields zero
-      // shingles (fewer than shingleN tokens): both get a null-signature
-      // tombstone row, derived by anti-joining batch ids against the fresh
-      // signatures, matching the bucket twin (mergeDedupBatch removes all
-      // touchedIds rows regardless of the fresh side).
-      val tombstones = batch.select(col(idCol)).distinct()
-        .join(freshSigs.select(col(idCol)), Seq(idCol), "left_anti")
-        .select(col(idCol) +: (0 until numHashes)
-          .map(i => lit(null).cast("long").as(s"sig_$i")): _*)
-      val seg = segOffset + batchId
-      appendSeg(shinglePath, freshShingles, seg)
-      appendSeg(sigPath, freshSigs.unionByName(tombstones), seg)
+      appendDedupPrepared(shinglePath, sigPath, idCol, segOffset + batchId)(
+        batch.select(col(idCol)).distinct(), freshShingles,
+        Dedup.minhashSignaturesFromShingles(freshShingles, idCol, numHashes))
+  }
+
+  /** [[appendDedupSegment]]'s commit over PREBUILT batch artifacts — for
+    * callers that already computed the batch's shingles and signatures
+    * (the streaming near-dup probe), so a micro-batch is tokenized and
+    * MinHashed exactly once. */
+  private[streaming] def appendDedupPrepared(
+      shinglePath: String, sigPath: String, idCol: String, seg: Long)(
+      batchIds: DataFrame, freshShingles: DataFrame,
+      freshSigs: DataFrame): Unit = {
+    // EVERY batch id must claim its doc in this segment, or the doc's
+    // older claim keeps winning at read. Deletes have no signature by
+    // construction — and so does an UPSERT whose new text yields zero
+    // shingles (fewer than shingleN tokens): both get a null-signature
+    // tombstone row, derived by anti-joining batch ids against the fresh
+    // signatures.
+    val tombstones = batchIds
+      .join(freshSigs.select(col(idCol)), Seq(idCol), "left_anti")
+      .select(col(idCol) +: freshSigs.schema.filterNot(_.name == idCol)
+        .map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+    commitSeg(shinglePath, freshShingles, idCol, seg)
+    commitSeg(sigPath, freshSigs.unionByName(tombstones), idCol, seg)
   }
 
   /** Reconciled (shingles, signatures) live view over the dedup segment
     * stores — the [[graft.operators.Dedup.minhashNearDupsFromStores]]
-    * input shape, like [[readDedupIndex]] for the bucket layout. */
+    * input shape. */
   def readDedupSegmentIndex(
       spark: SparkSession, shinglePath: String, sigPath: String,
       idCol: String): (DataFrame, DataFrame) = {
@@ -370,11 +370,11 @@ object IndexMaintenance {
     compactPair(spark, shinglePath, sigPath, sh, sigs)
   }
 
-  /** Segment-append twin of [[mergeVsBatch]] for the materialized LSH
-    * vector store — and a simplification: the (id, old-bucket) SIDECAR
-    * disappears. The bucket path needs it because a moved vector's old
-    * cell is not derivable from the id; with segments the old row simply
-    * LOSES the latest-claim reconcile, wherever it lives. Each batch
+  /** Segment-append writer for the materialized LSH vector store
+    * ([[graft.operators.ApproxAnn.materializeLshIndex]]'s cells). A moved
+    * vector's old cell is not derivable from its id, and need not be: the
+    * old row simply LOSES the latest-claim reconcile, wherever it lives,
+    * so no (id, cell) sidecar is kept. Each batch
     * appends rows (id, vector, `_bucket`) under `_seg=<id>/_bucket=<b>` —
     * the nested layout keeps `_bucket` a partition column, so the serving
     * probe's `IN (buckets)` filter still prunes directories inside every
@@ -400,9 +400,8 @@ object IndexMaintenance {
       val tombstones = batch.filter(isDelete)
         .select(col(idCol), lit(null).cast(fresh.schema(vecCol).dataType).as(vecCol),
           lit(-1L).as("_bucket"))
-      fresh.unionByName(tombstones)
-        .withColumn(SegCol, lit(segOffset + batchId))
-        .write.mode("append").partitionBy(SegCol, "_bucket").parquet(indexPath)
+      commitSeg(indexPath, fresh.unionByName(tombstones), idCol,
+        segOffset + batchId, Seq("_bucket"))
   }
 
   /** Reconciled live view over a one-row-per-id CELL store (LSH `_bucket` /
@@ -437,8 +436,7 @@ object IndexMaintenance {
 
   /** Reconciled live view over the vector segment store — the
     * [[graft.operators.ApproxAnn.searchLsh]] input shape (id, vector,
-    * `_bucket` long), like [[readVsIndex]] for the bucket layout. A
-    * probed stale row (its id re-bucketed or tombstoned by a later
+    * `_bucket` long). A probed stale row (its id re-bucketed or tombstoned by a later
     * segment) loses the (id, seg) join; tombstone rows carry no vector. */
   def readVsSegmentIndex(
       spark: SparkSession, indexPath: String, idCol: String,
@@ -452,10 +450,12 @@ object IndexMaintenance {
       vecCol: String = "embedding"): Unit =
     compactCellSegments(spark, indexPath, idCol, vecCol, "_bucket")
 
-  /** Segment-append twin of [[mergeIvfBatch]] — same shape as
+  /** Segment-append writer for a materialized IVF index
+    * ([[graft.operators.ApproxAnn.buildIvfIndex]]'s cells) — same shape as
     * [[appendVsSegment]] with the FIXED centroid set as the cell function
-    * (retraining centroids remains an index rebuild, as the bucket path
-    * documents); tombstones claim cell −1 with a null vector. */
+    * (retraining centroids is an index REBUILD, as the reference rebuilds
+    * on an index-options change); tombstones claim cell −1 with a null
+    * vector. */
   def appendIvfSegment(
       spark: SparkSession,
       indexPath: String,
@@ -474,13 +474,12 @@ object IndexMaintenance {
       val tombstones = batch.filter(isDelete)
         .select(col(idCol), lit(null).cast(fresh.schema(vecCol).dataType).as(vecCol),
           lit(-1L).as("_centroid"))
-      fresh.unionByName(tombstones)
-        .withColumn(SegCol, lit(segOffset + batchId))
-        .write.mode("append").partitionBy(SegCol, "_centroid").parquet(indexPath)
+      commitSeg(indexPath, fresh.unionByName(tombstones), idCol,
+        segOffset + batchId, Seq("_centroid"))
   }
 
   /** Reconciled IVF live view (the [[graft.operators.ApproxAnn.searchIvf]]
-    * input shape: id, vector, `_centroid` int — like [[readIvfIndex]]). */
+    * input shape: id, vector, `_centroid` int). */
   def readIvfSegmentIndex(
       spark: SparkSession, indexPath: String, idCol: String,
       vecCol: String = "embedding"): DataFrame =
@@ -492,7 +491,7 @@ object IndexMaintenance {
       vecCol: String = "embedding"): Unit =
     compactCellSegments(spark, indexPath, idCol, vecCol, "_centroid")
 
-  /** Segment-append twin of [[mergeIvfPqBatch]] (IVFADC codes): assign +
+  /** Segment-append writer for the IVFADC code store: assign +
     * PQ-encode per upsert, rows (id, `_pq`, `_centroid`) append under
     * `_seg/_centroid`; tombstones claim cell −1 with a null code. */
   def appendIvfPqSegment(
@@ -516,14 +515,12 @@ object IndexMaintenance {
       val tombstones = batch.filter(isDelete)
         .select(col(idCol), lit(null).cast(fresh.schema("_pq").dataType).as("_pq"),
           lit(-1L).as("_centroid"))
-      fresh.unionByName(tombstones)
-        .withColumn(SegCol, lit(segOffset + batchId))
-        .write.mode("append").partitionBy(SegCol, "_centroid").parquet(indexPath)
+      commitSeg(indexPath, fresh.unionByName(tombstones), idCol,
+        segOffset + batchId, Seq("_centroid"))
   }
 
   /** Reconciled IVFADC live view (the
-    * [[graft.operators.ApproxAnn.searchIvfPq]] `codes` shape, like
-    * [[readIvfPqIndex]]). */
+    * [[graft.operators.ApproxAnn.searchIvfPq]] `codes` shape). */
   def readIvfPqSegmentIndex(
       spark: SparkSession, indexPath: String, idCol: String): DataFrame =
     readCellSegments(spark, indexPath, idCol, "_pq", "_centroid")
@@ -533,7 +530,9 @@ object IndexMaintenance {
       spark: SparkSession, indexPath: String, idCol: String): Unit =
     compactCellSegments(spark, indexPath, idCol, "_pq", "_centroid")
 
-  /** Segment-append twin of [[mergePqBatch]] (flat PQ code store): one
+  /** Segment-append writer for the flat PQ code store
+    * ([[graft.operators.ApproxAnn.materializePqIndex]]'s codes; the
+    * codebooks are fixed index metadata): one
     * (id, `_pq`) row per id per touching segment, null-code tombstones;
     * the row IS its claim, so no cell column and no separate claims
     * store. */
@@ -554,7 +553,8 @@ object IndexMaintenance {
         .select(col(idCol), col("_pq"))
       val tombstones = batch.filter(isDelete)
         .select(col(idCol), lit(null).cast(fresh.schema("_pq").dataType).as("_pq"))
-      appendSeg(codesPath, fresh.unionByName(tombstones), segOffset + batchId)
+      commitSeg(codesPath, fresh.unionByName(tombstones), idCol,
+        segOffset + batchId)
   }
 
   /** Reconciled flat PQ code view: (id, `_pq`), latest claim wins. */
@@ -574,16 +574,17 @@ object IndexMaintenance {
     dropSegmentsBelow(spark, codesPath, ceiling)
   }
 
-  /** Segment-append twin of [[mergeSpanBatch]] / [[mergeLineBatch]]: the
-    * derived rows (span windows / line relation) are the values and a
+  /** Segment append for stores of rows derived per document (span windows,
+    * line relation): the derived rows are the values and a
     * one-row-per-id `_live` flag frame is the claims — the FTS pattern
     * with a boolean claim instead of a doc length. */
   private def appendDerivedSegment(
       valuesPath: String, claimsPath: String, idCol: String,
       batch: DataFrame, isDelete: org.apache.spark.sql.Column,
       derive: DataFrame => DataFrame, seg: Long): Unit = {
-    appendSeg(valuesPath, derive(batch.filter(!isDelete)), seg)
-    appendSeg(claimsPath, batch.select(col(idCol), (!isDelete).as("_live")), seg)
+    commitSeg(valuesPath, derive(batch.filter(!isDelete)), idCol, seg)
+    commitSeg(claimsPath, batch.select(col(idCol), (!isDelete).as("_live")),
+      idCol, seg)
   }
 
   private def readDerivedSegments(
@@ -614,7 +615,9 @@ object IndexMaintenance {
         segOffset + batchId)
   }
 
-  /** Reconciled span-window view (the [[readSpanIndex]] shape). */
+  /** Reconciled span-window view ((id, `_h`), the
+    * [[graft.operators.TextAnalysis.duplicatedSpanFractionFromWindows]]
+    * input). */
   def readSpanSegmentIndex(
       spark: SparkSession, spanPath: String, claimsPath: String,
       idCol: String): DataFrame =
@@ -636,7 +639,8 @@ object IndexMaintenance {
         segOffset + batchId)
   }
 
-  /** Reconciled line-relation view (the [[readLineIndex]] shape). */
+  /** Reconciled (id, ordinal, trimmed-line-hash) line relation (the
+    * [[graft.operators.TextAnalysis.lineDedupFromLines]] input). */
   def readLineSegmentIndex(
       spark: SparkSession, linePath: String, claimsPath: String,
       idCol: String): DataFrame =
@@ -647,14 +651,14 @@ object IndexMaintenance {
       idCol: String): Unit =
     compactDerivedSegments(spark, linePath, claimsPath, idCol)
 
-  /** Segment-append twin of [[StreamingIngest.mergeIntoSnapshot]] for the
-    * LWW row state — the log-structured shape of the same semantics: each
-    * batch appends its OWN LWW-compacted winners
+  /** Segment-append writer for the LWW row snapshot (the batch analogue of
+    * the reference's per-key monitor_items merge loop,
+    * table/mod.rs:887-1003): each batch appends its OWN LWW-compacted
+    * winners
     * ([[graft.operators.Lww.compactState]]: one row per touched pk with
     * payload + tombstone + winning writetime) as an immutable segment,
-    * O(batch) regardless of accumulated state. Cross-batch staleness (the
-    * late stale upsert the bucket merge rejects via the base read) is
-    * resolved AT READ by [[readSnapshotSegments]]: the winner across
+    * O(batch) regardless of accumulated state. Cross-batch staleness (a
+    * late upsert older than the stored winner) is resolved AT READ by [[readSnapshotSegments]]: the winner across
     * segments is picked by the SAME (writetime, first-arrival) order the
     * in-batch compaction uses — LWW max is associative, so hierarchical
     * per-batch-then-cross-segment compaction equals compaction over the
@@ -677,13 +681,11 @@ object IndexMaintenance {
         segOffset + batchId)
   }
 
-  /** Reconciled LWW state across snapshot segments (the
-    * [[StreamingIngest.mergeIntoSnapshot]] read shape: payload +
-    * tombstone + [[graft.operators.Lww.TsCol]] per pk). Winner order:
-    * higher writetime; equal writetimes go to the FIRST arrival —
-    * (segment, seq) ascending — matching the bucket path's base-wins /
-    * min-seq behavior, so the two layouts are row-identical on any event
-    * log. */
+  /** Reconciled LWW state across snapshot segments (payload + tombstone +
+    * [[graft.operators.Lww.TsCol]] per pk). Winner order: higher
+    * writetime; equal writetimes go to the FIRST arrival — (segment, seq)
+    * ascending — so the view is row-identical to
+    * [[graft.operators.Lww.compactState]] over the whole event log. */
   def readSnapshotSegments(
       spark: SparkSession, statePath: String, pkCols: Seq[String],
       seqCol: Option[String] = None): DataFrame = {
@@ -721,376 +723,15 @@ object IndexMaintenance {
     dropSegmentsBelow(spark, statePath, ceiling)
   }
 
-  /** foreachBatch writer for a materialized LSH vector index
-    * ([[graft.operators.ApproxAnn.materializeLshIndex]] layout: rows
-    * partitioned by the semantic `_bucket` directory). The reference's
-    * usearch index applies CDC upserts/deletes in place
-    * (db_index.rs / vs_index/usearch.rs add+remove per key); here:
-    *
-    * A changed vector may MOVE between buckets, and its old bucket is not
-    * derivable from the id — so the index keeps a narrow (id, _bucket)
-    * sidecar partitioned by pk-hash. Each batch:
-    *  1. looks up the old buckets of its ids in the sidecar (pk-hash-pruned),
-    *  2. computes new buckets for upserted vectors,
-    *  3. rewrites only old ∪ new bucket directories of the vector store
-    *     (drop all rows of touched ids, union fresh rows), and
-    *  4. updates the sidecar (pk-hash-bucket rewrite, same as FTS).
-    * Per-batch cost is O(changed vectors + their buckets), not O(index).
-    *
-    * @param dims vector dimensionality (index metadata, fixed per index) */
-  def mergeVsBatch(
-      spark: SparkSession,
-      indexPath: String,
-      sidecarPath: String,
-      idCol: String,
-      vecCol: String,
-      opCol: Option[String],
-      dims: Int,
-      nbits: Int,
-      nBuckets: Int = 64): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, _: Long) =>
-      import graft.operators.ApproxAnn
-      val isDelete = {
-        // coalesce: see mergeFtsBatch — a NULL op with a live vector upserts
-        val op = opCol.map(c => coalesce(upper(col(c)) === "DELETE", lit(false)))
-          .getOrElse(lit(false))
-        op || col(vecCol).isNull
-      }
-      val planes = ApproxAnn.hyperplanes(nbits, dims)
-      val fresh = batch.filter(!isDelete)
-        .select(col(idCol), col(vecCol),
-          ApproxAnn.lshBucket(col(vecCol), planes).as("_bucket"))
-      val touchedIds = batch.select(col(idCol)).distinct()
-      mergeSemanticBuckets(spark, indexPath, sidecarPath, idCol, vecCol,
-        "_bucket", fresh, touchedIds, nBuckets)
-  }
-
-  /** foreachBatch writer for a materialized IVF index
-    * ([[graft.operators.ApproxAnn.buildIvfIndex]] layout: rows partitioned
-    * by `_centroid`). Same shape as [[mergeVsBatch]] — the centroid set is
-    * FIXED index metadata during maintenance (like the LSH hyperplanes or
-    * dims): upserted vectors are assigned to their nearest existing
-    * centroid and only old ∪ new centroid cells rewrite. Retraining
-    * centroids is an index REBUILD, exactly as the reference rebuilds on
-    * index-options change (db_index.rs full-scan bootstrap). */
-  def mergeIvfBatch(
-      spark: SparkSession,
-      indexPath: String,
-      sidecarPath: String,
-      idCol: String,
-      vecCol: String,
-      opCol: Option[String],
-      centroids: Seq[(Int, Seq[Float])],
-      nBuckets: Int = 64): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, _: Long) =>
-      import graft.operators.ApproxAnn
-      val isDelete = {
-        // coalesce: see mergeFtsBatch — a NULL op with a live vector upserts
-        val op = opCol.map(c => coalesce(upper(col(c)) === "DELETE", lit(false)))
-          .getOrElse(lit(false))
-        op || col(vecCol).isNull
-      }
-      val fresh = ApproxAnn.assignToCentroids(
-          batch.filter(!isDelete).select(col(idCol), col(vecCol)),
-          vecCol, centroids)
-        .select(col(idCol), col(vecCol), col("_centroid").cast("long").as("_centroid"))
-      val touchedIds = batch.select(col(idCol)).distinct()
-      mergeSemanticBuckets(spark, indexPath, sidecarPath, idCol, vecCol,
-        "_centroid", fresh, touchedIds, nBuckets)
-  }
-
-  /** Shared semantic-bucket merge (LSH `_bucket` / IVF `_centroid`): a
-    * changed vector may MOVE between semantic cells and its old cell is not
-    * derivable from the id, so the index keeps a narrow (id, cell) sidecar
-    * partitioned by pk-hash. Per-batch cost is O(changed vectors + their
-    * cells), not O(index). */
-  private def mergeSemanticBuckets(
-      spark: SparkSession,
-      indexPath: String,
-      sidecarPath: String,
-      idCol: String,
-      vecCol: String,
-      semCol: String,
-      fresh: DataFrame,
-      touchedIds: DataFrame,
-      nBuckets: Int): Unit = {
-      val pkBucket = pmod(xxhash64(col(idCol)), lit(nBuckets.toLong)).cast("int")
-
-      // 1. old semantic buckets of the touched ids, via the pruned sidecar
-      val oldBuckets: Seq[Long] =
-        if (graft.sources.IndexStorage.hasData(spark, sidecarPath)) {
-          val touchedPk = touchedIds.select(pkBucket.as(BucketCol)).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          spark.read.parquet(sidecarPath)
-            .filter(col(BucketCol).isin(touchedPk: _*))
-            .join(touchedIds, Seq(idCol), "left_semi")
-            .select(col(semCol).cast("long")).distinct()
-            .collect().map(_.getLong(0)).toSeq
-        } else Nil
-      val newBuckets = fresh.select(col(semCol)).distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val touched = (oldBuckets ++ newBuckets).distinct
-
-      // 2-3. rewrite only the touched semantic bucket directories
-      val merged =
-        if (graft.sources.IndexStorage.hasData(spark, indexPath))
-          spark.read.parquet(indexPath)
-            .filter(col(semCol).isin(touched: _*)) // prune on the raw partition col
-            .select(col(idCol), col(vecCol), col(semCol).cast("long"))
-            .join(touchedIds, Seq(idCol), "left_anti")
-            .unionByName(fresh)
-        else fresh
-      overwriteBuckets(indexPath, semCol, merged, touched)
-
-      // 4. sidecar: replace (id → cell) rows, pk-hash partitioned
-      mergeKeyed(spark, sidecarPath, idCol, touchedIds,
-        fresh.select(col(idCol), col(semCol)), pkBucket, nBuckets)
-  }
-
-  /** foreachBatch writer for the flat PQ code store
-    * ([[graft.operators.ApproxAnn.materializePqIndex]] layout: id, _pq,
-    * pk-hash bucketed). The codebooks are FIXED index metadata during
-    * maintenance, like the IVF centroids or LSH hyperplanes — retraining
-    * them is an index rebuild. Codes are derived per row, so maintenance
-    * is plain [[mergeKeyed]]: no sidecar, no semantic-cell moves. */
-  def mergePqBatch(
-      spark: SparkSession,
-      codesPath: String,
-      idCol: String,
-      vecCol: String,
-      opCol: Option[String],
-      codebooks: graft.operators.ApproxAnn.PqCodebooks,
-      nBuckets: Int = 64): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, _: Long) =>
-      import graft.operators.ApproxAnn
-      val fresh = ApproxAnn.pqEncode(
-          batch.filter(!dedupIsDelete(vecCol, opCol)).select(col(idCol), col(vecCol)),
-          vecCol, codebooks)
-        .select(col(idCol), col("_pq"))
-      val touchedIds = batch.select(col(idCol)).distinct()
-      val bucket = pmod(xxhash64(col(idCol)), lit(nBuckets.toLong)).cast("int")
-      mergeKeyed(spark, codesPath, idCol, touchedIds, fresh, bucket, nBuckets)
-  }
-
-  /** foreachBatch writer for the IVFADC code store (`_centroid`-partitioned
-    * (id, _pq) rows, the [[graft.operators.ApproxAnn.searchIvfPq]] input):
-    * assignment + encode per upsert, then the same semantic-bucket merge as
-    * the IVF index — a changed vector may move cells, tracked by the
-    * sidecar; only old ∪ new cells rewrite. */
-  def mergeIvfPqBatch(
-      spark: SparkSession,
-      indexPath: String,
-      sidecarPath: String,
-      idCol: String,
-      vecCol: String,
-      opCol: Option[String],
-      centroids: Seq[(Int, Seq[Float])],
-      codebooks: graft.operators.ApproxAnn.PqCodebooks,
-      nBuckets: Int = 64): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, _: Long) =>
-      import graft.operators.ApproxAnn
-      val fresh = ApproxAnn.pqEncode(
-          ApproxAnn.assignToCentroids(
-            batch.filter(!dedupIsDelete(vecCol, opCol)).select(col(idCol), col(vecCol)),
-            vecCol, centroids),
-          vecCol, codebooks)
-        .select(col(idCol), col("_pq"), col("_centroid").cast("long").as("_centroid"))
-      val touchedIds = batch.select(col(idCol)).distinct()
-      mergeSemanticBuckets(spark, indexPath, sidecarPath, idCol, "_pq",
-        "_centroid", fresh, touchedIds, nBuckets)
-  }
-
-  /** Read the maintained IVFADC code store back (the
-    * [[graft.operators.ApproxAnn.searchIvfPq]] `codes` shape). */
-  def readIvfPqIndex(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(indexPath)
-      .withColumn("_centroid", col("_centroid").cast("int"))
-
-  /** foreachBatch writer for the positional span-window store
-    * ((id, _h), the [[graft.operators.TextAnalysis
-    * .duplicatedSpanFractionFromWindows]] input): windows are derived per
-    * row, so maintenance is plain [[mergeKeyed]] like the shingle store. */
-  def mergeSpanBatch(
-      spark: SparkSession,
-      spanPath: String,
-      idCol: String,
-      textCol: String,
-      opCol: Option[String],
-      windowLen: Int = 10,
-      nBuckets: Int = 64): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, _: Long) =>
-      import graft.operators.TextAnalysis
-      val fresh = TextAnalysis.spanWindows(
-        batch.filter(!dedupIsDelete(textCol, opCol)), idCol, textCol, windowLen)
-      val touchedIds = batch.select(col(idCol)).distinct()
-      val bucket = pmod(xxhash64(col(idCol)), lit(nBuckets.toLong)).cast("int")
-      mergeKeyed(spark, spanPath, idCol, touchedIds, fresh, bucket, nBuckets)
-  }
-
-  /** Read the maintained span-window store back. */
-  def readSpanIndex(spark: SparkSession, spanPath: String): DataFrame =
-    spark.read.parquet(spanPath).drop(BucketCol)
-
-  /** foreachBatch writer for the (id, ordinal, trimmed-line-hash) line
-    * relation ([[graft.operators.TextAnalysis.lineDedupFromLines]]'s
-    * input — the cross-doc line-dedup store): lines derive per row, so
-    * maintenance is plain [[mergeKeyed]] like the span store. */
-  def mergeLineBatch(
-      spark: SparkSession,
-      linePath: String,
-      idCol: String,
-      textCol: String,
-      opCol: Option[String],
-      nBuckets: Int = 64): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, _: Long) =>
-      import graft.operators.TextAnalysis
-      val fresh = TextAnalysis.lineRelation(
-        batch.filter(!dedupIsDelete(textCol, opCol)), idCol, textCol)
-      val touchedIds = batch.select(col(idCol)).distinct()
-      val bucket = pmod(xxhash64(col(idCol)), lit(nBuckets.toLong)).cast("int")
-      mergeKeyed(spark, linePath, idCol, touchedIds, fresh, bucket, nBuckets)
-  }
-
-  /** Read the maintained line-relation store back. */
-  def readLineIndex(spark: SparkSession, linePath: String): DataFrame =
-    spark.read.parquet(linePath).drop(BucketCol)
-
-  /** Read the maintained IVF index back (the [[ApproxAnn.searchIvf]] input
-    * shape: id, vector, _centroid int). */
-  def readIvfIndex(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(indexPath)
-      .withColumn("_centroid", col("_centroid").cast("int"))
-
-  /** Read the maintained vector index back (the [[ApproxAnn.searchLsh]]
-    * input shape: id, vector, _bucket). */
-  def readVsIndex(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(indexPath)
-      .withColumn("_bucket", col("_bucket").cast("long"))
-
-  /** foreachBatch writer for the dedup index artifacts: the (id, sh)
-    * shingle store and the (id, sig_*) MinHash signature store that
-    * [[graft.operators.Dedup.minhashNearDupsFromStores]] serves from. Both
-    * are keyed by doc id, so maintenance is the [[mergeKeyed]] shape: drop
-    * every row of a touched id, union freshly computed shingles/signatures
-    * for the upserts, rewrite only the touched pk-hash buckets. Signatures
-    * derive from the SAME fresh shingle frame (one tokenize pass per
-    * batch), keeping the two stores consistent by construction. */
-  def mergeDedupBatch(
-      spark: SparkSession,
-      shinglePath: String,
-      sigPath: String,
-      idCol: String,
-      textCol: String,
-      opCol: Option[String],
-      shingleN: Int = 5,
-      numHashes: Int = 16,
-      nBuckets: Int = 64): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, _: Long) =>
-      import graft.operators.Dedup
-      val isDelete = dedupIsDelete(textCol, opCol)
-      val upserts = batch.filter(!isDelete)
-      val touchedIds = batch.select(col(idCol)).distinct()
-      val freshShingles = Dedup.shingles(upserts, idCol, textCol, shingleN)
-        .localCheckpoint(true) // one tokenize pass feeds both stores
-      val freshSigs =
-        Dedup.minhashSignaturesFromShingles(freshShingles, idCol, numHashes)
-      mergeDedupPrepared(spark, shinglePath, sigPath, idCol, nBuckets)(
-        touchedIds, freshShingles, freshSigs)
-  }
-
-  /** The delete predicate shared by the dedup maintenance and the
-    * streaming near-dup probe (one definition, two callers — the two
-    * delete semantics must not drift). */
+  /** The delete predicate shared by every segment writer and the streaming
+    * near-dup probes (one definition — the delete semantics must not
+    * drift). */
   private[streaming] def dedupIsDelete(
       textCol: String, opCol: Option[String]): org.apache.spark.sql.Column = {
-    // coalesce: see mergeFtsBatch — a NULL op with live text upserts
+    // coalesce: a NULL op must not three-valued-null the predicate — an
+    // event with a missing op but live text is an upsert, not a delete
     val op = opCol.map(c => coalesce(upper(col(c)) === "DELETE", lit(false)))
       .getOrElse(lit(false))
     op || col(textCol).isNull
-  }
-
-  /** [[mergeDedupBatch]]'s store merge over PREBUILT batch artifacts — for
-    * callers that already computed the batch's shingles/signatures (the
-    * streaming near-dup probe), so a micro-batch is tokenized and
-    * MinHashed exactly once. */
-  def mergeDedupPrepared(
-      spark: SparkSession,
-      shinglePath: String,
-      sigPath: String,
-      idCol: String,
-      nBuckets: Int = 64)(
-      touchedIds: DataFrame,
-      freshShingles: DataFrame,
-      freshSigs: DataFrame): Unit = {
-    val bucket = pmod(xxhash64(col(idCol)), lit(nBuckets.toLong)).cast("int")
-    mergeKeyed(spark, shinglePath, idCol, touchedIds, freshShingles, bucket, nBuckets)
-    mergeKeyed(spark, sigPath, idCol, touchedIds, freshSigs, bucket, nBuckets)
-  }
-
-  /** Read the maintained dedup stores back as the
-    * (shingles, signatures) pair `minhashNearDupsFromStores` consumes. */
-  def readDedupIndex(
-      spark: SparkSession, shinglePath: String, sigPath: String)
-      : (DataFrame, DataFrame) =
-    (spark.read.parquet(shinglePath).drop(BucketCol),
-      spark.read.parquet(sigPath).drop(BucketCol))
-
-  /** Replace all rows keyed by `touchedIds` with `fresh` rows, rewriting
-    * only the bucket directories those keys live in. Shared shape with
-    * [[StreamingIngest.mergeIntoSnapshot]] (LWW row state); here the value
-    * rows are one-to-many per key (postings). */
-  private def mergeKeyed(
-      spark: SparkSession,
-      path: String,
-      idCol: String,
-      touchedIds: DataFrame,
-      fresh: DataFrame,
-      bucket: org.apache.spark.sql.Column,
-      nBuckets: Int): Unit = {
-    val exists = graft.sources.IndexStorage.hasData(spark, path)
-    val touched: Seq[Int] =
-      if (exists) touchedIds.select(bucket.as(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      else Nil
-    val merged =
-      if (exists)
-        spark.read.parquet(path)
-          .filter(col(BucketCol).isin(touched: _*)) // PartitionFilters prune
-          .drop(BucketCol)
-          .join(touchedIds, Seq(idCol), "left_anti") // upsert = replace
-          .unionByName(fresh)
-      else fresh
-    overwriteBuckets(path, BucketCol, merged.withColumn(BucketCol, bucket), touched)
-  }
-
-  /** Dynamic-partition-overwrite `merged` into `path` clustered by
-    * `bucketCol`, then clear touched buckets that ended up EMPTY — dynamic
-    * overwrite only replaces partitions present in the written data, so a
-    * bucket whose rows were all deleted would otherwise keep a stale
-    * directory. localCheckpoint cuts lineage to the files being replaced
-    * (read-modify-write on one path); clustering by bucket gives one writer
-    * per directory.
-    *
-    * COMMIT VISIBILITY CONTRACT (same as StreamingIngest.mergeIntoSnapshot):
-    * touched bucket directories are replaced in place and emptied buckets
-    * are deleted outside any commit protocol, so serving reads must plan
-    * against a quiesced store — between micro-batches, or through a
-    * snapshot-isolating table layer. */
-  private def overwriteBuckets(
-      path: String, bucketCol: String, merged: DataFrame, touched: Seq[Any]): Unit = {
-    val out = merged.repartition(col(bucketCol)).localCheckpoint(true)
-    out.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(bucketCol)
-      .parquet(path)
-    if (touched.nonEmpty) {
-      val present = out.select(col(bucketCol)).distinct()
-        .collect().map(_.get(0)).toSet
-      (touched.toSet -- present).foreach { b =>
-        graft.sources.IndexStorage.deleteRecursive(
-          merged.sparkSession, s"$path/$bucketCol=$b")
-      }
-    }
   }
 }

@@ -43,11 +43,22 @@ object StreamingDedup {
     * micro-batch, (1) probes the incoming documents against the
     * corpus-so-far via [[graft.operators.Dedup.nearDupProbe]] (MinHash band
     * candidates, exact-Jaccard verify), (2) writes the verified pairs to
-    * `pairsPath/epoch=N` (overwrite-per-epoch ⇒ idempotent under replay),
-    * and (3) merges the batch into the maintained shingle/signature stores
-    * ([[IndexMaintenance.mergeDedupBatch]]: touched-bucket-only rewrites).
+    * `pairsPath/epoch=N` (overwrite-per-epoch), and (3) commits the batch
+    * to the maintained shingle/signature segment stores
+    * ([[IndexMaintenance.appendDedupSegment]]'s commit, read back through
+    * [[IndexMaintenance.readDedupSegmentIndex]]) as segment N, where
+    * N = `segOffset` + the foreachBatch epoch. The stores fold on the
+    * default [[IndexMaintenance.CompactionPolicy]] cadence
+    * ([[IndexMaintenance.withCompaction]]).
     *
-    * Probe-before-merge: on an APPEND-ONLY stream every near-dup pair of
+    * Replay-idempotent: a re-run of epoch N overwrites its pair partition
+    * and replaces its own rows in segment N, before or after a fold at N.
+    * Segment ids must be monotonic over the stores' lifetime: a new
+    * streaming query over existing stores (its epochs restart at 0) passes
+    * the previous query's last N + 1 as `segOffset`, or the older claims
+    * keep winning.
+    *
+    * Probe-before-append: on an APPEND-ONLY stream every near-dup pair of
     * the growing corpus is emitted exactly once — in the epoch where its
     * later member arrives — so the accumulated pair log equals the batch
     * operator over the final corpus (pinned in StreamingSpec). Under
@@ -70,40 +81,48 @@ object StreamingDedup {
       numHashes: Int = 16,
       bands: Int = 4,
       threshold: Double = 0.5,
-      nBuckets: Int = 64): (DataFrame, Long) => Unit = {
+      segOffset: Long = 0L): (DataFrame, Long) => Unit = {
     import graft.operators.Dedup
     import graft.sources.IndexStorage
-    (batch: DataFrame, epoch: Long) => {
-      val upserts = batch.filter(!IndexMaintenance.dedupIsDelete(textCol, opCol))
-      val touched = batch.select(col(idCol)).distinct()
-      // ONE tokenize+MinHash pass per batch feeds the probe AND the merge
-      val probeSh = Dedup.shingles(upserts, idCol, textCol, shingleN)
-        .localCheckpoint(true)
-      val probeSigs = Dedup.minhashSignaturesFromShingles(probeSh, idCol, numHashes)
-      val (storeSh, storeSigs) =
-        if (IndexStorage.hasData(spark, shinglePath) && IndexStorage.hasData(spark, sigPath))
-          IndexMaintenance.readDedupIndex(spark, shinglePath, sigPath)
-        else (probeSh.limit(0), probeSigs.limit(0))
-      Dedup.nearDupProbe(probeSh, probeSigs, storeSh, storeSigs,
-          idCol, bands, threshold, excludeIds = Some(touched))
-        .write.mode("overwrite").parquet(s"$pairsPath/epoch=$epoch")
-      IndexMaintenance.mergeDedupPrepared(spark, shinglePath, sigPath, idCol,
-        nBuckets)(touched, probeSh, probeSigs)
+    IndexMaintenance.withCompaction(spark, sigPath,
+        IndexMaintenance.CompactionPolicy(),
+        () => IndexMaintenance.compactDedupSegments(
+          spark, shinglePath, sigPath, idCol)) {
+      (batch: DataFrame, epoch: Long) =>
+        val seg = segOffset + epoch
+        val upserts = batch.filter(!IndexMaintenance.dedupIsDelete(textCol, opCol))
+        val touched = batch.select(col(idCol)).distinct()
+        // ONE tokenize+MinHash pass per batch feeds the probe AND the append
+        val probeSh = Dedup.shingles(upserts, idCol, textCol, shingleN)
+          .localCheckpoint(true)
+        val probeSigs = Dedup.minhashSignaturesFromShingles(probeSh, idCol, numHashes)
+        val (storeSh, storeSigs) =
+          if (IndexStorage.hasData(spark, shinglePath) && IndexStorage.hasData(spark, sigPath))
+            IndexMaintenance.readDedupSegmentIndex(spark, shinglePath, sigPath, idCol)
+          else (probeSh.limit(0), probeSigs.limit(0))
+        Dedup.nearDupProbe(probeSh, probeSigs, storeSh, storeSigs,
+            idCol, bands, threshold, excludeIds = Some(touched))
+          .write.mode("overwrite").parquet(s"$pairsPath/epoch=$seg")
+        IndexMaintenance.appendDedupPrepared(shinglePath, sigPath, idCol, seg)(
+          touched, probeSh, probeSigs)
     }
   }
 
   /** Cross-modal twin of [[nearDupBatch]]: per micro-batch, probe the
-    * incoming EMBEDDINGS against the maintained LSH vector store
+    * incoming EMBEDDINGS against the maintained LSH vector segment store
     * ([[graft.operators.Dedup.embeddingNearDupProbe]]: Hamming-ball bucket
-    * candidates, exact cosine verify), write pairs to `pairsPath/epoch=N`
-    * (overwrite ⇒ replay-idempotent), then merge the batch into the store
-    * ([[IndexMaintenance.mergeVsBatch]]: touched-cell rewrites + sidecar).
-    * Same probe-before-merge contract and event-stream semantics as the
-    * text path. */
+    * candidates, exact cosine verify, over
+    * [[IndexMaintenance.readVsSegmentIndex]]'s reconciled view), write
+    * pairs to `pairsPath/epoch=N`, then commit the batch to the store as
+    * segment N ([[IndexMaintenance.appendVsSegment]]). A re-delivered id
+    * whose vector moved cells leaves its old row behind in the old cell;
+    * the reconcile drops that stale row at read, so it never pairs. Same
+    * probe-before-append contract, event-stream semantics, replay
+    * idempotence and `segOffset` restart contract as the text path; the
+    * store folds once it holds more than 4 segments. */
   def embeddingNearDupBatch(
       spark: SparkSession,
       indexPath: String,
-      sidecarPath: String,
       pairsPath: String,
       idCol: String,
       vecCol: String,
@@ -112,25 +131,30 @@ object StreamingDedup {
       threshold: Double,
       nbits: Int,
       radius: Int = 2,
-      nBuckets: Int = 64): (DataFrame, Long) => Unit = {
+      segOffset: Long = 0L): (DataFrame, Long) => Unit = {
     import graft.operators.Dedup
     import graft.sources.IndexStorage
-    val merge = IndexMaintenance.mergeVsBatch(
-      spark, indexPath, sidecarPath, idCol, vecCol, opCol, dims, nbits, nBuckets)
-    (batch: DataFrame, epoch: Long) => {
-      val upserts = batch.filter(!IndexMaintenance.dedupIsDelete(vecCol, opCol))
-      val touched = batch.select(col(idCol)).distinct()
-      val store =
-        if (IndexStorage.hasData(spark, indexPath))
-          IndexMaintenance.readVsIndex(spark, indexPath)
-        else upserts.select(col(idCol), col(vecCol)).limit(0)
-          .withColumn("_bucket", lit(0L))
-      Dedup.embeddingNearDupProbe(
-          upserts.select(col(idCol), col(vecCol)), store, idCol, vecCol,
-          threshold, nbits, radius, excludeIds = Some(touched),
-          dims = Some(dims))
-        .write.mode("overwrite").parquet(s"$pairsPath/epoch=$epoch")
-      merge(batch, epoch)
+    val append = IndexMaintenance.appendVsSegment(
+      spark, indexPath, idCol, vecCol, opCol, dims, nbits, segOffset)
+    // a fold every 4 segments, not the default 16: each epoch adds one
+    // directory per touched bucket, and every probe lists them all
+    IndexMaintenance.withCompaction(spark, indexPath,
+        IndexMaintenance.CompactionPolicy(maxSegments = 4),
+        () => IndexMaintenance.compactVsSegments(spark, indexPath, idCol, vecCol)) {
+      (batch: DataFrame, epoch: Long) =>
+        val upserts = batch.filter(!IndexMaintenance.dedupIsDelete(vecCol, opCol))
+        val touched = batch.select(col(idCol)).distinct()
+        val store =
+          if (IndexStorage.hasData(spark, indexPath))
+            IndexMaintenance.readVsSegmentIndex(spark, indexPath, idCol, vecCol)
+          else upserts.select(col(idCol), col(vecCol)).limit(0)
+            .withColumn("_bucket", lit(0L))
+        Dedup.embeddingNearDupProbe(
+            upserts.select(col(idCol), col(vecCol)), store, idCol, vecCol,
+            threshold, nbits, radius, excludeIds = Some(touched),
+            dims = Some(dims))
+          .write.mode("overwrite").parquet(s"$pairsPath/epoch=${segOffset + epoch}")
+        append(batch, epoch)
     }
   }
 

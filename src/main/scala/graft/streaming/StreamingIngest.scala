@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.operators.Lww
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -10,7 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Reference architecture being re-expressed:
   *  - dual-cadence CDC readers with safety intervals (db_cdc/actor.rs:42-105)
   *    → one stream with a watermark; the "wide reader" consistency pass is a
-  *    periodic batch reconciliation with [[Lww.applyChanges]] (idempotent);
+  *    periodic batch reconciliation with
+  *    [[graft.operators.Lww.applyChanges]] (idempotent);
   *  - duplicate (pk,ts,op) suppression (db_cdc/consumer.rs:219-225)
   *    → dropDuplicates within the watermark;
   *  - per-key LWW state machine (table/mod.rs:887-1003)
@@ -18,7 +18,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - CDC upsert enrichment re-read (db_cdc/consumer.rs:60-122)
   *    → stream-static left join, missing base row ⇒ synthesized delete;
   *  - FTS commit batching every 3 s (fts_index/tantivy.rs:129-130)
-  *    → Trigger.ProcessingTime + foreachBatch merge.
+  *    → Trigger.ProcessingTime + foreachBatch segment appends
+  *    ([[IndexMaintenance]], the LWW row snapshot included), wrapped by
+  *    [[withCdcMetrics]].
   *
   * Scale: state is per-key (pk digest), partitioned by Spark's state store —
   * 1000 executors hold disjoint key ranges; nothing is driver-resident.
@@ -135,50 +137,6 @@ object StreamingIngest {
         .otherwise(lit("UPSERT")))
   }
 
-  /** Partition column holding the pk-hash bucket in the state snapshot. */
-  val BucketCol = "_bkt"
-
-  /** foreachBatch merge: compact the micro-batch and LWW-merge it into the
-    * parquet snapshot at `statePath` (the batch analogue of the reference's
-    * per-key monitor_items merge loop, table/mod.rs:887-1003). Returns the
-    * writer lambda for `.writeStream.foreachBatch(...)`.
-    *
-    * INCREMENTAL: the snapshot is directory-partitioned by a pk-hash bucket
-    * ([[BucketCol]] = pmod(xxhash64(pk), nBuckets)). Each micro-batch
-    *  1. computes the set of buckets its keys touch (≤ nBuckets ints),
-    *  2. reads ONLY those bucket directories (partition-pruned scan),
-    *  3. LWW-merges the batch into them, and
-    *  4. rewrites ONLY those directories (dynamic partition overwrite).
-    * Untouched bucket files are never read or rewritten, so per-batch cost is
-    * O(touched state), not O(total state) — the property that keeps a 100 TB
-    * snapshot serviceable by a trickle of CDC events. The reference gets the
-    * same effect with per-key in-place updates; directory granularity is the
-    * Spark-native equivalent.
-    *
-    * COMMIT VISIBILITY CONTRACT: the touched bucket directories are rewritten
-    * in place (dynamic partition overwrite), so a reader that PLANS a scan
-    * while a commit replaces files can hit FileNotFoundException or observe a
-    * half-rewritten bucket. Serving reads must start from a quiesced snapshot:
-    * either schedule reads between micro-batches (the foreachBatch cadence
-    * makes commits discrete), or read through a snapshot-isolating table
-    * layer. Per-commit queryability in ContinuousIngestSpec re-plans after
-    * each batch completes, which is the supported pattern.
-    *
-    * @param nBuckets bucket count — size so one bucket ≈ a comfortable task
-    *                 read (state_bytes / nBuckets well under executor memory) */
-  /** Wrap a foreachBatch sink with the reference's CDC observability
-    * (metrics.rs `cdc_reader_up` / `cdc_last_processed_timestamp_seconds` /
-    * `indexing_lag_seconds` / `modified` / `cdc_handler_errors_total`,
-    * fed from db_cdc/actor.rs's reader loop): marks the reader live on
-    * construction, and per micro-batch records the row count as modified
-    * items, advances the checkpoint gauge to the batch's max event
-    * timestamp, observes the ingest lag (wall clock − newest event), and
-    * counts handler errors before rethrowing so the stream's own retry
-    * policy still applies. The stats pass and the sink share one cached
-    * batch — the input is read once.
-    *
-    * @param tsCol event-time column castable to TIMESTAMP (epoch seconds
-    *              after the double cast) */
   /** Tie the `cdc_reader_up` gauge to a RUNNING StreamingQuery's lifetime:
     * up=1 now, up=0 when THIS query terminates — normally or on error. The
     * reference's reader loop maintains the gauge from its own task
@@ -212,18 +170,22 @@ object StreamingIngest {
     if (!query.isActive) engine.setCdcReaderUp(keyspace, index, reader, up = false)
   }
 
-  /** @param fenceCommits take the engine's per-index store fence (write
-    *        side) around each batch commit — the default, because the
-    *        bucket/segment maintainers replace directories outside any
-    *        commit protocol. The fence serializes serving reads against
-    *        the WHOLE batch commit; purely additive pipelines (segment
-    *        appends whose half-written segment readers tolerate, e.g. a
-    *        snapshot-pinned reader) may pass false to keep serving p99
-    *        decoupled from batch duration — the measured trade is yours. */
+  /** Wrap a foreachBatch sink with the reference's CDC observability
+    * (metrics.rs `cdc_reader_up` / `cdc_last_processed_timestamp_seconds` /
+    * `indexing_lag_seconds` / `modified` / `cdc_handler_errors_total`,
+    * fed from db_cdc/actor.rs's reader loop): marks the reader live on
+    * construction, and per micro-batch records the row count as modified
+    * items, advances the checkpoint gauge to the batch's max event
+    * timestamp, observes the ingest lag (wall clock − newest event), and
+    * counts handler errors before rethrowing so the stream's own retry
+    * policy still applies. The stats pass and the sink share one cached
+    * batch — the input is read once.
+    *
+    * @param tsCol event-time column castable to TIMESTAMP (epoch seconds
+    *              after the double cast) */
   def withCdcMetrics(
       engine: graft.operators.Engine, keyspace: String, index: String,
-      reader: String, tsCol: String, operation: String = "upsert",
-      fenceCommits: Boolean = true)(
+      reader: String, tsCol: String, operation: String = "upsert")(
       sink: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
     engine.setCdcReaderUp(keyspace, index, reader, up = true)
     // the checkpoint is a reader POSITION — monotone by definition; a late
@@ -241,10 +203,8 @@ object StreamingIngest {
             .head()
           // write side of the engine's store fence: serving actions on
           // this index wait out the commit instead of scanning a
-          // half-replaced bucket (Engine.withMaintenance)
-          if (fenceCommits)
-            engine.withMaintenance(keyspace, index) { sink(cached, epoch) }
-          else sink(cached, epoch)
+          // half-written segment or a mid-fold store (Engine.withMaintenance)
+          engine.withMaintenance(keyspace, index) { sink(cached, epoch) }
           // record only AFTER the sink commits: a failed batch must not
           // advance the checkpoint or count as indexed
           engine.recordModified(keyspace, index, operation, stats.getLong(0))
@@ -263,38 +223,5 @@ object StreamingIngest {
           engine.incrementCdcError(keyspace, index, reader)
           throw e
       }
-  }
-
-  def mergeIntoSnapshot(
-      spark: SparkSession,
-      statePath: String,
-      pkCols: Seq[String],
-      tsCol: String,
-      opCol: Option[String],
-      targetCol: Option[String],
-      seqCol: Option[String],
-      nBuckets: Int = 64): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, _: Long) =>
-      val bucket = pmod(xxhash64(pkCols.map(col): _*), lit(nBuckets.toLong)).cast("int")
-      val merged =
-        if (graft.sources.IndexStorage.exists(spark, statePath)) {
-          val touched = batch.select(bucket.as(BucketCol)).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          val base = spark.read.parquet(statePath)
-            .filter(col(BucketCol).isin(touched: _*)) // PartitionFilters prune
-          Lww.applyChanges(base, batch, pkCols, tsCol, opCol, targetCol, seqCol)
-        } else Lww.compactState(batch, pkCols, tsCol, opCol, targetCol, seqCol)
-      // localCheckpoint cuts lineage to the state files about to be replaced
-      // (read-modify-write on one path); only the touched buckets' rows are
-      // materialized, and clustering by bucket gives one writer per directory
-      val out = merged.withColumn(BucketCol, bucket)
-        .repartition(col(BucketCol))
-        .localCheckpoint(true)
-      out.write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BucketCol)
-        .parquet(statePath)
-      ()
   }
 }

@@ -9,10 +9,12 @@ import org.apache.spark.sql.functions._
 
 /** The reference's full continuous-ingest story, end-to-end on Structured
   * Streaming (SURVEY §3.3): one CDC stream drives, per micro-batch,
-  *  - the LWW row snapshot (bucketed incremental merge),
+  *  - the LWW row snapshot,
   *  - the FTS postings/doc-length stores,
-  *  - the LSH vector index (+ pk→bucket sidecar), and
-  *  - the dedup artifacts (shingle + MinHash signature stores),
+  *  - the LSH vector index,
+  *  - the dedup artifacts (shingle + MinHash signature stores), and
+  *  - the span-window store,
+  * each as segment appends reconciled at read,
   * and after every commit the row state, BM25 search, ANN search, and
   * near-dup queries all reflect exactly the live data — the Spark analogue
   * of engine.rs wiring db_cdc → Table cache → usearch/tantivy with
@@ -30,25 +32,28 @@ class ContinuousIngestSpec extends SparkSpec {
     def p(n: String) = new java.io.File(dir, n).getAbsolutePath
     val dims = 4
 
-    val mergeRows = StreamingIngest.mergeIntoSnapshot(
+    val appendRows = IndexMaintenance.appendSnapshotSegment(
       spark, p("state"), Seq("doc_id"), "ts",
       opCol = Some("op"), targetCol = Some("embedding"), seqCol = Some("seq"))
-    val mergeFts = IndexMaintenance.mergeFtsBatch(
+    def state() = IndexMaintenance.readSnapshotSegments(
+      spark, p("state"), Seq("doc_id"), seqCol = Some("seq"))
+    val appendFts = IndexMaintenance.appendFtsSegment(
       spark, p("postings"), p("doclens"), "doc_id", "text", opCol = Some("op"))
-    val mergeVs = IndexMaintenance.mergeVsBatch(
-      spark, p("lsh"), p("sidecar"), "doc_id", "embedding",
+    val appendVs = IndexMaintenance.appendVsSegment(
+      spark, p("lsh"), "doc_id", "embedding",
       opCol = Some("op"), dims = dims, nbits = 8)
-    // near-dup probe + dedup-store merge in one body (probe-before-merge):
+    // near-dup probe + dedup-store append in one body (probe-before-append):
     // the CDC loop also emits the streaming pair log
-    val mergeDedup = graft.streaming.StreamingDedup.nearDupBatch(
+    val appendDedup = graft.streaming.StreamingDedup.nearDupBatch(
       spark, p("shingles"), p("sigs"), p("pairs"), "doc_id", "text",
       opCol = Some("op"), threshold = 0.5)
-    val mergeSpan = IndexMaintenance.mergeSpanBatch(
-      spark, p("span"), "doc_id", "text", opCol = Some("op"), windowLen = 5)
+    val appendSpan = IndexMaintenance.appendSpanSegment(
+      spark, p("span"), p("spanClaims"), "doc_id", "text", opCol = Some("op"),
+      windowLen = 5)
 
     val mem = MemoryStream[DocEvent](spark)
     // the engine carrying the CDC observability gauges — withCdcMetrics
-    // wraps the whole merge body so the reader-up / modified / checkpoint /
+    // wraps the whole commit body so the reader-up / modified / checkpoint /
     // lag families advance per committed micro-batch, in a REAL stream
     val eng = new graft.operators.Engine
     val q = mem.toDF().writeStream
@@ -59,39 +64,41 @@ class ContinuousIngestSpec extends SparkSpec {
         // snapshot is the Table cache and decides winners — including
         // cross-batch staleness — then the indexes follow the cache's
         // authoritative rows for the touched keys
-        mergeRows(batch, id)
+        appendRows(batch, id)
         val touched = batch.select(col("doc_id")).distinct()
         val tomb = col(graft.operators.Lww.TombstoneCol)
-        val cur = spark.read.parquet(p("state"))
+        val cur = state()
           .join(touched, Seq("doc_id"), "left_semi")
           .select(col("doc_id"),
             when(tomb, lit(null)).otherwise(col("text")).as("text"),
             when(tomb, lit(null)).otherwise(col("embedding")).as("embedding"),
             when(tomb, lit("DELETE")).otherwise(lit("UPSERT")).as("op"))
-        mergeFts(cur, id)
-        mergeVs(cur, id)
-        mergeDedup(cur, id)
-        mergeSpan(cur, id)
+        appendFts(cur, id)
+        appendVs(cur, id)
+        appendDedup(cur, id)
+        appendSpan(cur, id)
       })
       .start()
     // gauge tied to THIS query's lifetime: up now, 0 after terminate
     StreamingIngest.bindReaderLiveness(eng, q, "ks", "docs", "realtime")
 
     def liveIds(): Set[Long] =
-      spark.read.parquet(p("state"))
+      state()
         .filter(!col(graft.operators.Lww.TombstoneCol))
         .select("doc_id").as[Long].collect().toSet
     def ftsHits(term: String): Set[Long] = {
-      val pos = IndexMaintenance.readFtsIndex(spark, p("postings"), p("doclens"), "doc_id")
+      val pos = IndexMaintenance.readFtsSegmentIndex(
+        spark, p("postings"), p("doclens"), "doc_id")
       Bm25.scoreAll(Bm25.Index(pos.postings.select("doc_id", "term", "tf"), pos.docLens, "doc_id"), term)
         .select("doc_id").as[Long].collect().toSet
     }
     def annTop(qv: Seq[Float]): Long =
-      Ann.plan(IndexMaintenance.readVsIndex(spark, p("lsh")), "embedding",
+      Ann.plan(IndexMaintenance.readVsSegmentIndex(spark, p("lsh"), "doc_id"), "embedding",
           Seq("doc_id"), Euclidean, AnnRequest(qv, limit = 1))
         .select("doc_id").as[Long].head()
     def nearDups(): Set[(Long, Long)] = {
-      val (sh, sigs) = IndexMaintenance.readDedupIndex(spark, p("shingles"), p("sigs"))
+      val (sh, sigs) = IndexMaintenance.readDedupSegmentIndex(
+        spark, p("shingles"), p("sigs"), "doc_id")
       Dedup.minhashNearDupsFromStores(sh, sigs, "doc_id",
           bands = 4, threshold = 0.5, maxShingleDf = None)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -156,7 +163,8 @@ class ContinuousIngestSpec extends SparkSpec {
       assert(pairLog == Set((1L, 1L, 2L), (2L, 1L, 2L)), pairLog)
 
       // the span store tracks the LWW-authoritative live rows exactly
-      val spanGot = IndexMaintenance.readSpanIndex(spark, p("span"))
+      val spanGot = IndexMaintenance.readSpanSegmentIndex(
+          spark, p("span"), p("spanClaims"), "doc_id")
         .as[(Long, Long)].collect().toSet
       val spanWant = graft.operators.TextAnalysis.spanWindows(
           Seq((1L, fox1), (2L, fox2)).toDF("doc_id", "text"),

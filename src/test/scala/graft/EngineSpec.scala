@@ -347,7 +347,7 @@ class EngineSpec extends SparkSpec {
   }
 
   test("store fence: a read during a maintenance commit waits for the commit") {
-    // the commit-visibility contract (IndexMaintenance.overwriteBuckets /
+    // the commit-visibility contract (IndexMaintenance segment appends /
     // compact* scaladoc), enforced: serving actions take the read side of
     // the per-index fence, commits the write side — a mid-commit scan is
     // impossible BY CONSTRUCTION, not by prose (VERDICT r9 #7)

@@ -4,9 +4,11 @@ import graft.operators.Bm25
 import graft.streaming.IndexMaintenance
 import org.apache.spark.sql.functions._
 
-/** Incremental FTS index maintenance (ST6): per-batch searchability,
-  * upsert-as-replace / delete semantics, equality with a full rebuild,
-  * and touched-bucket-only rewrites. */
+/** Incremental index maintenance (ST6) over the segment-append stores:
+  * per-batch searchability, upsert-as-replace / delete semantics, equality
+  * with a full rebuild, O(batch) commits that leave earlier segments
+  * byte-identical, compaction, and served queries over the reconciled
+  * views. */
 class IndexMaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,65 +17,6 @@ class IndexMaintenanceSpec extends SparkSpec {
 
   private def hits(p: Bm25.PosIndex, term: String): Set[Long] =
     Bm25.scoreAll(tfIndex(p), term).select("doc_id").as[Long].collect().toSet
-
-  test("incremental FTS maintenance: searchable per batch, == full rebuild, bucket-scoped rewrites") {
-    import org.apache.commons.io.FileUtils
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fts_inc").toFile
-    val pPath = new java.io.File(dir, "postings").getAbsolutePath
-    val lPath = new java.io.File(dir, "doclens").getAbsolutePath
-    val merge = IndexMaintenance.mergeFtsBatch(
-      spark, pPath, lPath, "doc_id", "text", opCol = Some("op"))
-
-    def bkt(id: Long): Int = spark.range(1)
-      .select(pmod(xxhash64(lit(id)), lit(64L)).cast("int")).head.getInt(0)
-    def crcs(path: String): Map[String, Long] =
-      FileUtils.listFiles(new java.io.File(path), Array("parquet"), true)
-        .asScala.map(f => f.getAbsolutePath -> FileUtils.checksumCRC32(f)).toMap
-
-    try {
-      // batch 1: three docs, immediately searchable (commit batching)
-      merge(Seq(
-        (1L, "the quick brown fox", "UPSERT"),
-        (2L, "a slow turtle walks", "UPSERT"),
-        (3L, "spark merges windows", "UPSERT")).toDF("doc_id", "text", "op"), 0L)
-      val idx1 = IndexMaintenance.readFtsIndex(spark, pPath, lPath, "doc_id")
-      assert(hits(idx1, "turtle") == Set(2L))
-      assert(hits(idx1, "spark") == Set(3L))
-      val before = crcs(pPath)
-
-      // batch 2: update doc 2 (replace, not append), delete doc 3
-      merge(Seq(
-        (2L, "a fast turtle runs", "UPSERT"),
-        (3L, null.asInstanceOf[String], "DELETE")).toDF("doc_id", "text", "op"), 1L)
-      val idx2 = IndexMaintenance.readFtsIndex(spark, pPath, lPath, "doc_id")
-      assert(hits(idx2, "fast") == Set(2L))
-      assert(hits(idx2, "slow").isEmpty, "stale postings of an updated doc must be gone")
-      assert(hits(idx2, "spark").isEmpty, "deleted doc must leave the index")
-      assert(hits(idx2, "fox") == Set(1L), "untouched doc unaffected")
-
-      // doc 1's bucket was not touched by batch 2 → files byte-identical
-      assert(bkt(1L) != bkt(2L) && bkt(1L) != bkt(3L),
-        "fixture ids must hash to distinct buckets for the rewrite assertion")
-      val after = crcs(pPath)
-      val b1 = s"${IndexMaintenance.BucketCol}=${bkt(1L)}"
-      assert(after.filter(_._1.contains(b1)) == before.filter(_._1.contains(b1)),
-        "untouched bucket was rewritten")
-
-      // the maintained store equals a from-scratch rebuild of the live corpus
-      val rebuilt = Bm25.buildPositionalIndex(Seq(
-        (1L, "the quick brown fox"),
-        (2L, "a fast turtle runs")).toDF("doc_id", "text"), "doc_id", "text")
-      def postRows(df: org.apache.spark.sql.DataFrame) = df
-        .select(col("doc_id"), col("term"), col("tf").cast("long"),
-          col("positions").cast("array<int>"))
-        .collect().map(_.toSeq).toSet
-      assert(postRows(idx2.postings) == postRows(rebuilt.postings))
-      def lenRows(df: org.apache.spark.sql.DataFrame) = df
-        .select(col("doc_id"), col("dl").cast("long")).collect().map(_.toSeq).toSet
-      assert(lenRows(idx2.docLens) == lenRows(rebuilt.docLens))
-    } finally FileUtils.deleteDirectory(dir)
-  }
 
   test("segment-append FTS maintenance: O(batch) commits, reconciled reads, compaction") {
     import org.apache.commons.io.FileUtils
@@ -104,8 +47,7 @@ class IndexMaintenanceSpec extends SparkSpec {
 
       // batch 1: update doc 2, delete doc 3. The earlier segment's files
       // must be BYTE-IDENTICAL afterwards — the commit appended a new
-      // segment and touched nothing else (the O(batch) property the bucket
-      // rewrite loses once batches spray every bucket).
+      // segment and touched nothing else (the O(batch) property).
       append(Seq(
         (2L, "a fast turtle runs", "UPSERT"),
         (3L, null.asInstanceOf[String], "DELETE")).toDF("doc_id", "text", "op"), 1L)
@@ -152,32 +94,35 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("incremental LSH vector index: bucket moves, deletes, == full rebuild") {
+    // the vector store the streaming embedding near-dup probe maintains:
+    // its segment appends must track bucket moves and deletes exactly
     import graft.operators.ApproxAnn
+    import graft.streaming.StreamingDedup
     import org.apache.commons.io.FileUtils
     val dir = java.nio.file.Files.createTempDirectory("graft_vs_inc").toFile
     val iPath = new java.io.File(dir, "lsh").getAbsolutePath
-    val sPath = new java.io.File(dir, "sidecar").getAbsolutePath
     val dims = 8
-    val merge = IndexMaintenance.mergeVsBatch(
-      spark, iPath, sPath, "vec_id", "embedding", opCol = Some("op"),
-      dims = dims, nbits = 8)
+    val probeAndAppend = StreamingDedup.embeddingNearDupBatch(
+      spark, iPath, new java.io.File(dir, "pairs").getAbsolutePath,
+      "vec_id", "embedding", opCol = Some("op"), dims = dims,
+      threshold = 0.99, nbits = 8)
 
     def vec(seed: Long, sign: Float = 1f): Seq[Float] =
       Array.tabulate(dims)(d => sign * math.sin(seed * 1.7 + d).toFloat).toSeq
-    def indexRows(p: String): Set[(Long, Seq[Float], Long)] =
-      IndexMaintenance.readVsIndex(spark, p)
+    def indexRows(): Set[(Long, Seq[Float], Long)] =
+      IndexMaintenance.readVsSegmentIndex(spark, iPath, "vec_id")
         .select(col("vec_id"), col("embedding"), col("_bucket"))
         .as[(Long, Seq[Float], Long)].collect().toSet
 
     try {
-      merge(Seq(
+      probeAndAppend(Seq(
         (1L, vec(1), "UPSERT"), (2L, vec(2), "UPSERT"), (3L, vec(3), "UPSERT"))
         .toDF("vec_id", "embedding", "op"), 0L)
-      assert(indexRows(iPath).map(_._1) == Set(1L, 2L, 3L))
+      assert(indexRows().map(_._1) == Set(1L, 2L, 3L))
 
       // negating v2 flips every projection sign ⇒ it must move buckets;
       // delete v3 entirely
-      merge(Seq(
+      probeAndAppend(Seq(
         (2L, vec(2, -1f), "UPSERT"),
         (3L, null.asInstanceOf[Seq[Float]], "DELETE"))
         .toDF("vec_id", "embedding", "op"), 1L)
@@ -186,17 +131,11 @@ class IndexMaintenanceSpec extends SparkSpec {
       val rebuilt = ApproxAnn.buildLshIndex(live, "embedding", nbits = 8, dims = dims)
         .select(col("vec_id"), col("embedding"), col("_bucket"))
         .as[(Long, Seq[Float], Long)].collect().toSet
-      assert(indexRows(iPath) == rebuilt,
+      assert(indexRows() == rebuilt,
         "maintained index must equal a from-scratch rebuild of the live rows")
-
-      // exactly one row per id in the index (the old-bucket copy is gone)
-      val perId = indexRows(iPath).groupBy(_._1).view.mapValues(_.size).toMap
+      // exactly one row per id in the view (the old-bucket copy is gone)
+      val perId = indexRows().groupBy(_._1).view.mapValues(_.size).toMap
       assert(perId == Map(1L -> 1, 2L -> 1))
-      // and the sidecar agrees with the index
-      val side = spark.read.parquet(sPath)
-        .select(col("vec_id"), col("_bucket").cast("long"))
-        .as[(Long, Long)].collect().toMap
-      assert(side == indexRows(iPath).map(r => r._1 -> r._3).toMap)
     } finally FileUtils.deleteDirectory(dir)
   }
 
@@ -262,18 +201,13 @@ class IndexMaintenanceSpec extends SparkSpec {
     } finally FileUtils.deleteDirectory(dir)
   }
 
-  test("segment-append LWW snapshot: row-identical to the bucket merge, stale updates lose, compaction window") {
+  test("segment-append LWW snapshot: row-identical to compactState over the whole log, stale updates lose, compaction window") {
     import graft.operators.Lww
-    import graft.streaming.StreamingIngest
     import org.apache.commons.io.FileUtils
     val dir = java.nio.file.Files.createTempDirectory("graft_lww_seg").toFile
     val segPath = new java.io.File(dir, "seg").getAbsolutePath
-    val bktPath = new java.io.File(dir, "bkt").getAbsolutePath
     val appendSeg = IndexMaintenance.appendSnapshotSegment(
       spark, segPath, Seq("doc_id"), "ts", opCol = Some("op"),
-      targetCol = Some("text"), seqCol = Some("seq"))
-    val mergeBkt = StreamingIngest.mergeIntoSnapshot(
-      spark, bktPath, Seq("doc_id"), "ts", opCol = Some("op"),
       targetCol = Some("text"), seqCol = Some("seq"))
     def segState() = IndexMaintenance.readSnapshotSegments(
       spark, segPath, Seq("doc_id"), seqCol = Some("seq"))
@@ -293,13 +227,15 @@ class IndexMaintenanceSpec extends SparkSpec {
       Seq((2L, "beta updated", "UPSERT", 200L, 8L), (3L, null, "DELETE", 200L, 9L)))
     try {
       batches.zipWithIndex.foreach { case (evs, i) =>
-        val df = evs.toDF("doc_id", "text", "op", "ts", "seq")
-        appendSeg(df, i.toLong)
-        mergeBkt(df, i.toLong)
+        appendSeg(evs.toDF("doc_id", "text", "op", "ts", "seq"), i.toLong)
       }
-      val bucketState = spark.read.parquet(bktPath)
-      assert(canon(segState()) == canon(bucketState),
-        "segment and bucket snapshot layouts must be row-identical on the same log")
+      // oracle: one LWW compaction over the concatenated event log — the
+      // per-batch-then-cross-segment reconcile must equal it row for row
+      val wholeLog = Lww.compactState(
+        batches.flatten.toDF("doc_id", "text", "op", "ts", "seq"),
+        Seq("doc_id"), "ts", Some("op"), Some("text"), Some("seq"))
+      assert(canon(segState()) == canon(wholeLog),
+        "segment snapshot must be row-identical to compactState over the whole log")
       // the semantics themselves (spot): stale update lost, delete won,
       // equal-ts first arrival won
       val byId = segState().select(col("doc_id"), col("text"), col(Lww.TombstoneCol))
@@ -329,17 +265,16 @@ class IndexMaintenanceSpec extends SparkSpec {
     import org.apache.commons.io.FileUtils
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_inc").toFile
     val iPath = new java.io.File(dir, "ivf").getAbsolutePath
-    val sPath = new java.io.File(dir, "sidecar").getAbsolutePath
     // fixed centroid metadata: two well-separated cells
     val centroids = Seq(0 -> Seq(1f, 0f, 0f, 0f), 1 -> Seq(-1f, 0f, 0f, 0f))
-    val merge = IndexMaintenance.mergeIvfBatch(
-      spark, iPath, sPath, "vec_id", "embedding", opCol = Some("op"), centroids)
+    val append = IndexMaintenance.appendIvfSegment(
+      spark, iPath, "vec_id", "embedding", opCol = Some("op"), centroids)
     def rows(p: String): Set[(Long, Seq[Float], Int)] =
-      IndexMaintenance.readIvfIndex(spark, p)
+      IndexMaintenance.readIvfSegmentIndex(spark, p, "vec_id")
         .select(col("vec_id"), col("embedding"), col("_centroid"))
         .as[(Long, Seq[Float], Int)].collect().toSet
     try {
-      merge(Seq(
+      append(Seq(
         (1L, Seq(0.9f, 0.1f, 0f, 0f), "UPSERT"),
         (2L, Seq(-0.8f, 0f, 0.1f, 0f), "UPSERT"),
         (3L, Seq(0.7f, 0f, 0f, 0.2f), "UPSERT"))
@@ -347,7 +282,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       assert(rows(iPath).map(r => r._1 -> r._3).toMap == Map(1L -> 0, 2L -> 1, 3L -> 0))
 
       // v1 flips sign → moves cells; v3 deleted
-      merge(Seq(
+      append(Seq(
         (1L, Seq(-0.9f, 0.1f, 0f, 0f), "UPSERT"),
         (3L, null.asInstanceOf[Seq[Float]], "DELETE"))
         .toDF("vec_id", "embedding", "op"), 1L)
@@ -360,72 +295,14 @@ class IndexMaintenanceSpec extends SparkSpec {
       assert(rows(iPath) == reassigned,
         "maintained IVF index must equal fresh assignment of the live rows")
 
-      // served query over the maintained store sees only live vectors
+      // served query over the reconciled store sees only live vectors: v1's
+      // stale copy in cell 0 and v3's tombstone never surface
       val got = ApproxAnn.searchIvf(
-          IndexMaintenance.readIvfIndex(spark, iPath), "embedding",
+          IndexMaintenance.readIvfSegmentIndex(spark, iPath, "vec_id"), "embedding",
           Seq("vec_id"), graft.functions.VectorFunctions.Euclidean,
           Ann.AnnRequest(Seq(-1f, 0f, 0f, 0f), limit = 5), centroids, nprobe = 1)
         .select("vec_id").as[Long].collect().toSet
       assert(got == Set(1L, 2L))
-    } finally FileUtils.deleteDirectory(dir)
-  }
-
-  test("incremental PQ / IVFADC / span stores: == full rebuild of the live rows") {
-    import graft.operators.{ApproxAnn, TextAnalysis}
-    import org.apache.commons.io.FileUtils
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_inc").toFile
-    def p(n: String) = new java.io.File(dir, n).getAbsolutePath
-    // fixed metadata: 2 centroids, 2 subspaces × 2 codewords over dim 4
-    val centroids = Seq(0 -> Seq(1f, 0f, 0f, 0f), 1 -> Seq(-1f, 0f, 0f, 0f))
-    val codebooks: ApproxAnn.PqCodebooks = Seq(
-      Seq(0 -> Seq(1f, 0f), 1 -> Seq(-1f, 0f)),
-      Seq(0 -> Seq(0f, 1f), 1 -> Seq(0f, -1f)))
-    val mergePq = IndexMaintenance.mergePqBatch(
-      spark, p("pq"), "vec_id", "embedding", Some("op"), codebooks)
-    val mergeIvfPq = IndexMaintenance.mergeIvfPqBatch(
-      spark, p("ivfpq"), p("sidecar"), "vec_id", "embedding", Some("op"),
-      centroids, codebooks)
-    val mergeSpan = IndexMaintenance.mergeSpanBatch(
-      spark, p("span"), "vec_id", "text", Some("op"), windowLen = 3)
-    def b(rows: Seq[(Long, Seq[Float], String, String)]) =
-      rows.toDF("vec_id", "embedding", "text", "op")
-    try {
-      val b0 = b(Seq(
-        (1L, Seq(0.9f, 0.2f, 0f, 0.5f), "one two three four five", "UPSERT"),
-        (2L, Seq(-0.8f, -0.3f, 0.1f, 0f), "six seven eight nine", "UPSERT"),
-        (3L, Seq(0.7f, 0f, -0.2f, 0.1f), "one two three four six", "UPSERT")))
-      Seq(mergePq, mergeIvfPq, mergeSpan).foreach(_(b0, 0L))
-      // v1 flips sign (moves IVF cell, changes codes), v3 deleted
-      val b1 = b(Seq(
-        (1L, Seq(-0.9f, 0.2f, 0f, -0.5f), "one two three four five", "UPSERT"),
-        (3L, null, null, "DELETE")))
-      Seq(mergePq, mergeIvfPq, mergeSpan).foreach(_(b1, 1L))
-
-      val live = Seq(
-        (1L, Seq(-0.9f, 0.2f, 0f, -0.5f), "one two three four five"),
-        (2L, Seq(-0.8f, -0.3f, 0.1f, 0f), "six seven eight nine"))
-        .toDF("vec_id", "embedding", "text")
-      // flat PQ store == fresh encode of the live rows
-      val pqGot = spark.read.parquet(p("pq")).select("vec_id", "_pq")
-        .as[(Long, Seq[Int])].collect().toSet
-      val pqWant = ApproxAnn.pqEncode(live, "embedding", codebooks)
-        .select("vec_id", "_pq").as[(Long, Seq[Int])].collect().toSet
-      assert(pqGot == pqWant)
-      // IVFADC store == fresh assign+encode; cells reflect the move
-      val ipqGot = IndexMaintenance.readIvfPqIndex(spark, p("ivfpq"))
-        .select("vec_id", "_pq", "_centroid").as[(Long, Seq[Int], Int)].collect().toSet
-      val ipqWant = ApproxAnn.pqEncode(
-          ApproxAnn.assignToCentroids(live, "embedding", centroids),
-          "embedding", codebooks)
-        .select("vec_id", "_pq", "_centroid").as[(Long, Seq[Int], Int)].collect().toSet
-      assert(ipqGot == ipqWant)
-      assert(ipqGot.forall(_._3 == 1)) // both live vectors now in cell 1
-      // span store == fresh windows of the live rows
-      val spanGot = IndexMaintenance.readSpanIndex(spark, p("span"))
-        .as[(Long, Long)].collect().toSet
-      val spanWant = TextAnalysis.spanWindows(live, "vec_id", "text", 3)
-        .as[(Long, Long)].collect().toSet
-      assert(spanGot == spanWant)
     } finally FileUtils.deleteDirectory(dir)
   }
 
@@ -480,6 +357,7 @@ class IndexMaintenanceSpec extends SparkSpec {
           "embedding", codebooks)
         .select("vec_id", "_pq", "_centroid").as[(Long, Seq[Int], Int)].collect().toSet
       assert(ipqGot() == ipqWant)
+      assert(ipqGot().forall(_._3 == 1)) // both live vectors now in cell 1
       def pqGot() = IndexMaintenance.readPqSegmentCodes(spark, p("pq"), "vec_id")
         .as[(Long, Seq[Int])].collect().toSet
       val pqWant = ApproxAnn.pqEncode(live, "embedding", codebooks)
@@ -521,29 +399,29 @@ class IndexMaintenanceSpec extends SparkSpec {
     import org.apache.commons.io.FileUtils
     val dir = java.nio.file.Files.createTempDirectory("graft_line_inc").toFile
     val path = new java.io.File(dir, "lines").getAbsolutePath
-    val merge = IndexMaintenance.mergeLineBatch(
-      spark, path, "doc_id", "text", Some("op"))
+    val claims = new java.io.File(dir, "claims").getAbsolutePath
+    val append = IndexMaintenance.appendLineSegment(
+      spark, path, claims, "doc_id", "text", Some("op"))
+    def lines() = IndexMaintenance.readLineSegmentIndex(spark, path, claims, "doc_id")
     try {
-      merge(Seq(
+      append(Seq(
         (1L, "banner\nalpha one", "UPSERT"),
         (2L, "banner\nbeta two", "UPSERT"),
         (3L, "gone soon\nbanner", "UPSERT")).toDF("doc_id", "text", "op"), 0L)
       // doc 1 rewritten (drops the banner), doc 3 deleted
-      merge(Seq(
+      append(Seq(
         (1L, "alpha one\nnew line", "UPSERT"),
         (3L, null, "DELETE")).toDF("doc_id", "text", "op"), 1L)
       val live = Seq(
         (1L, "alpha one\nnew line"),
         (2L, "banner\nbeta two")).toDF("doc_id", "text")
-      val got = IndexMaintenance.readLineIndex(spark, path)
-        .as[(Long, Int, Long)].collect().toSet
+      val got = lines().as[(Long, Int, Long)].collect().toSet
       val want = TextAnalysis.lineRelation(live, "doc_id", "text")
         .as[(Long, Int, Long)].collect().toSet
       assert(got == want)
       // served query == direct operator on the live corpus ("banner" now
       // appears in only one live doc, so nothing dedups)
-      val served = TextAnalysis.lineDedupFromLines(
-          IndexMaintenance.readLineIndex(spark, path), live, "doc_id", "text")
+      val served = TextAnalysis.lineDedupFromLines(lines(), live, "doc_id", "text")
         .select("doc_id", "clean_text").as[(Long, String)].collect().toMap
       val direct = TextAnalysis.lineDedup(live, "doc_id", "text")
         .select("doc_id", "clean_text").as[(Long, String)].collect().toMap
@@ -553,25 +431,30 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("incremental dedup stores: shingles + signatures == full rebuild; store-served query correct") {
+    // the stores the streaming near-dup probe maintains: one tokenize +
+    // MinHash pass per batch feeds both the probe and the segment append
     import graft.operators.Dedup
+    import graft.streaming.StreamingDedup
     import org.apache.commons.io.FileUtils
     val dir = java.nio.file.Files.createTempDirectory("graft_dedup_inc").toFile
     val shPath = new java.io.File(dir, "shingles").getAbsolutePath
     val sgPath = new java.io.File(dir, "sigs").getAbsolutePath
-    val merge = IndexMaintenance.mergeDedupBatch(
-      spark, shPath, sgPath, "doc_id", "text", opCol = Some("op"))
+    val pairsPath = new java.io.File(dir, "pairs").getAbsolutePath
+    val probeAndAppend = StreamingDedup.nearDupBatch(
+      spark, shPath, sgPath, pairsPath, "doc_id", "text", opCol = Some("op"))
     try {
-      merge(Seq(
+      probeAndAppend(Seq(
         (1L, "the quick brown fox jumps over the lazy dog near the river bank", "UPSERT"),
         (2L, "completely different content about spark query engines and scale", "UPSERT"),
         (3L, "the quick brown fox jumps over the lazy dog near the river bend", "UPSERT"))
         .toDF("doc_id", "text", "op"), 0L)
       // update doc 2 to a near-dup of 1, delete doc 3
-      merge(Seq(
+      probeAndAppend(Seq(
         (2L, "the quick brown fox jumps over the lazy dog near the river bank", "UPSERT"),
         (3L, null.asInstanceOf[String], "DELETE")).toDF("doc_id", "text", "op"), 1L)
 
-      val (sh, sigs) = IndexMaintenance.readDedupIndex(spark, shPath, sgPath)
+      val (sh, sigs) = IndexMaintenance.readDedupSegmentIndex(
+        spark, shPath, sgPath, "doc_id")
       val live = Seq(
         (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
         (2L, "the quick brown fox jumps over the lazy dog near the river bank"))
@@ -589,6 +472,10 @@ class IndexMaintenanceSpec extends SparkSpec {
           bands = 4, threshold = 0.9, maxShingleDf = None)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(nd == Set((1L, 2L)))
+      // the probe saw the pair emerge in the epoch of the update
+      val logged = spark.read.parquet(pairsPath)
+        .select("epoch", "id_a", "id_b").as[(Long, Long, Long)].collect().toSet
+      assert(logged.contains((1L, 1L, 2L)), logged)
     } finally FileUtils.deleteDirectory(dir)
   }
 
@@ -753,12 +640,91 @@ class IndexMaintenanceSpec extends SparkSpec {
     } finally FileUtils.deleteDirectory(dir)
   }
 
+  test("segment writers: a replayed batch adds no second copy, before or after a fold at its ceiling") {
+    // foreachBatch delivers at least once: the last batch re-runs after a
+    // crash before its checkpoint commit. A second copy of its rows in its
+    // segment would be kept by the reconcile (duplicate live rows, a
+    // duplicated doc in every join over the view).
+    import org.apache.commons.io.FileUtils
+    val dir = java.nio.file.Files.createTempDirectory("graft_seg_replay").toFile
+    def p(n: String) = new java.io.File(dir, n).getAbsolutePath
+    val dims = 8
+    def vec(seed: Long, sign: Float = 1f): Seq[Float] =
+      Array.tabulate(dims)(d => sign * math.sin(seed * 1.7 + d).toFloat).toSeq
+    val b0 = Seq((1L, vec(1), "UPSERT"), (2L, vec(2), "UPSERT"), (3L, vec(3), "UPSERT"))
+      .toDF("vec_id", "embedding", "op")
+    // v2 moves bucket (every projection sign flips), v3 is deleted
+    val b1 = Seq((2L, vec(2, -1f), "UPSERT"), (3L, null.asInstanceOf[Seq[Float]], "DELETE"))
+      .toDF("vec_id", "embedding", "op")
+    def rawRows(path: String): Seq[String] =
+      spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+    def vsView(path: String): Seq[(Long, Seq[Float], Long)] =
+      IndexMaintenance.readVsSegmentIndex(spark, path, "vec_id")
+        .select(col("vec_id"), col("embedding"), col("_bucket"))
+        .as[(Long, Seq[Float], Long)].collect().toSeq.sortBy(_._1)
+    val want = Seq(1L -> vec(1), 2L -> vec(2, -1f))
+    try {
+      // cell store, no fold: replay of a complete, then of a PARTIAL commit
+      val vs = p("vs")
+      val appendVs = IndexMaintenance.appendVsSegment(
+        spark, vs, "vec_id", "embedding", opCol = Some("op"), dims = dims, nbits = 8)
+      appendVs(b0, 0L); appendVs(b1, 1L)
+      val raw = rawRows(vs)
+      val view = vsView(vs)
+      assert(view.map(r => r._1 -> r._2) == want)
+      appendVs(b1, 1L)
+      assert(rawRows(vs) == raw, "a replay must not add a second copy to its segment")
+      assert(vsView(vs) == view)
+      // an earlier attempt that died after writing only v2's cell
+      FileUtils.deleteDirectory(new java.io.File(s"$vs/_seg=1/_bucket=-1"))
+      appendVs(b1, 1L)
+      assert(rawRows(vs) == raw, "a replay must complete a partial commit")
+
+      // cell store folded INTO the replayed batch's segment: the replay
+      // must keep the folded history (v1 lives only in _seg=1 now)
+      val vsF = p("vs_fold")
+      val appendVsF = IndexMaintenance.withCompaction(
+        spark, vsF, IndexMaintenance.CompactionPolicy(maxSegments = 1),
+        () => IndexMaintenance.compactVsSegments(spark, vsF, "vec_id"))(
+        IndexMaintenance.appendVsSegment(
+          spark, vsF, "vec_id", "embedding", opCol = Some("op"), dims = dims, nbits = 8))
+      appendVsF(b0, 0L); appendVsF(b1, 1L)
+      assert(IndexMaintenance.ftsSegmentCount(spark, vsF) == 1)
+      appendVsF(b1, 1L)
+      assert(vsView(vsF) == view, "a replay after a fold lost or doubled rows")
+      assert(spark.read.parquet(vsF).filter(col("vec_id") === 1L).count() == 1)
+
+      // values + claims pair store (FTS), folded into the replayed segment
+      val (post, lens) = (p("post"), p("lens"))
+      val appendFts = IndexMaintenance.withCompaction(
+        spark, lens, IndexMaintenance.CompactionPolicy(maxSegments = 1),
+        () => IndexMaintenance.compactFtsSegments(spark, post, lens, "doc_id"))(
+        IndexMaintenance.appendFtsSegment(
+          spark, post, lens, "doc_id", "text", opCol = Some("op")))
+      val t0 = Seq((1L, "alpha beta", "UPSERT"), (2L, "beta gamma", "UPSERT"))
+        .toDF("doc_id", "text", "op")
+      val t1 = Seq((2L, "gamma delta delta", "UPSERT"), (3L, "beta", "UPSERT"))
+        .toDF("doc_id", "text", "op")
+      def ftsView(): (Seq[String], Seq[String]) = {
+        val idx = IndexMaintenance.readFtsSegmentIndex(spark, post, lens, "doc_id")
+        (idx.postings.select("doc_id", "term", "tf").collect().map(_.toString).toSeq.sorted,
+          idx.docLens.select("doc_id", "dl").collect().map(_.toString).toSeq.sorted)
+      }
+      appendFts(t0, 0L); appendFts(t1, 1L)
+      val fts = ftsView()
+      assert(fts._2 == Seq("[1,2]", "[2,3]", "[3,1]"))
+      appendFts(t1, 1L)
+      assert(ftsView() == fts, "a replay after a fold lost or doubled postings")
+      assert(spark.read.parquet(post).filter(col("term") === "delta").count() == 1)
+    } finally FileUtils.deleteDirectory(dir)
+  }
+
   test("segment dedup store: an upsert with zero shingles still claims its doc") {
     // ADVICE r9 regression: Dedup.shingles emits nothing for a doc with
     // fewer than shingleN tokens, so a shingle-less UPSERT used to write no
     // claim row — the doc's older claim kept winning and the read served
-    // the STALE shingles/signature. Every batch id must claim, matching the
-    // bucket twin (mergeDedupBatch removes all touchedIds rows regardless).
+    // the STALE shingles/signature. Every batch id must claim, whatever the
+    // fresh side holds.
     import org.apache.commons.io.FileUtils
     val dir = java.nio.file.Files.createTempDirectory("graft_dedup_seg_claim").toFile
     val shPath = new java.io.File(dir, "shingles").getAbsolutePath

@@ -119,23 +119,25 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[KeyedEvent](spark)
     val q = mem.toDS().toDF()
       .writeStream
-      .foreachBatch(StreamingIngest.mergeIntoSnapshot(
+      .foreachBatch(graft.streaming.IndexMaintenance.appendSnapshotSegment(
         spark, statePath, Seq("key"), "ts",
         opCol = None, targetCol = Some("payload"), seqCol = Some("seq")))
       .start()
+    def liveKeys(): Set[String] =
+      graft.streaming.IndexMaintenance.readSnapshotSegments(
+          spark, statePath, Seq("key"), seqCol = Some("seq"))
+        .filter(!col(Lww.TombstoneCol)).select("key").as[String].collect().toSet
     try {
       mem.addData(Seq(ev("a", 100, 0), ev("b", 100, 1)))
       q.processAllAvailable()
       mem.addData(Seq(ev("a", 200, 2, tomb = true), ev("c", 300, 3)))
       q.processAllAvailable()
-      val live = spark.read.parquet(statePath)
-        .filter(!col(Lww.TombstoneCol)).select("key").as[String].collect().toSet
+      val live = liveKeys()
       assert(live == Set("b", "c"))
-      // replaying batch 2 is a no-op (idempotent merge)
+      // redelivering batch 2 is a no-op on the reconciled state
       mem.addData(Seq(ev("a", 200, 4, tomb = true), ev("c", 300, 5)))
       q.processAllAvailable()
-      val live2 = spark.read.parquet(statePath)
-        .filter(!col(Lww.TombstoneCol)).select("key").as[String].collect().toSet
+      val live2 = liveKeys()
       assert(live2 == Set("b", "c"))
     } finally {
       q.stop()
@@ -296,11 +298,18 @@ class StreamingSpec extends SparkSpec {
       (6L, v(12, 0.015f)))                             // epoch 2: pairs with 5
     val batches = Seq(rows.take(3), rows.slice(3, 5), rows.drop(5))
     val fn = StreamingDedup.embeddingNearDupBatch(
-      spark, p("lsh"), p("sidecar"), p("pairs"),
+      spark, p("lsh"), p("pairs"),
       "vec_id", "embedding", opCol = None, dims = 8, threshold = 0.99,
       nbits = 8)
     batches.zipWithIndex.foreach { case (b, i) =>
       fn(b.toDF("vec_id", "embedding"), i.toLong) }
+    // a replay of the last epoch leaves the store holding exactly its rows
+    // (a second copy of v6 would pair (5, 6) twice in a later probe)
+    def lshRows(): Seq[String] =
+      spark.read.parquet(p("lsh")).collect().map(_.toString).toSeq.sorted
+    val lshBefore = lshRows()
+    fn(batches.last.toDF("vec_id", "embedding"), 2L)
+    assert(lshRows() == lshBefore, "a replayed epoch added a second copy of its vectors")
     val streamed = spark.read.parquet(p("pairs"))
       .select("id_a", "id_b", "cos_sim").as[(Long, Long, Double)].collect().toSeq
     assert(streamed.map(x => (x._1, x._2)).distinct.length == streamed.length)
@@ -314,6 +323,24 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.toSet == batch.toSet, s"streamed=$streamed batch=$batch")
     assert(streamed.map(x => (x._1, x._2)).toSet
       .intersect(Set((1L, 2L), (1L, 4L), (2L, 4L), (5L, 6L))).size >= 3)
+
+    // a re-delivered id whose vector MOVES buckets: v3's old row stays on
+    // disk in its old cell, and only the read-side reconcile drops it. A
+    // near-dup of the OLD vector must never pair with that stale copy,
+    // while a near-dup of the NEW vector pairs with the moved row.
+    val moved = v(7).map(-_) // every projection sign flips: another bucket
+    fn(Seq((3L, moved)).toDF("vec_id", "embedding"), 3L)
+    val cells3 = spark.read.parquet(p("lsh")).filter(col("vec_id") === 3L)
+      .select(col("_bucket").cast("long")).as[Long].collect().toSet
+    assert(cells3.size == 2, s"v3 must sit in its old AND new cell on disk: $cells3")
+    fn(Seq((7L, v(7, 0.01f)), (8L, moved.updated(0, moved.head + 0.01f)))
+      .toDF("vec_id", "embedding"), 4L)
+    def epochPairs(e: Long): Set[(Long, Long)] = spark.read.parquet(p("pairs"))
+      .filter(col("epoch") === e).select("id_a", "id_b").as[(Long, Long)]
+      .collect().map { case (a, b) => (a min b, a max b) }.toSet
+    assert(epochPairs(3L).isEmpty, "the moved vector has no near-dup yet")
+    assert(epochPairs(4L) == Set((3L, 8L)),
+      s"only the moved row may pair; the stale copy of v3 must not: ${epochPairs(4L)}")
     FileUtils.deleteDirectory(dir)
   }
 
@@ -332,7 +359,7 @@ class StreamingSpec extends SparkSpec {
     fnT(Seq((2L, text, "UPSERT")).toDF("id", "text", "op"), 2L) // must not throw
     assert(spark.read.parquet(p("tp")).count() == 0) // doc 1 was gone
     val fnE = StreamingDedup.embeddingNearDupBatch(
-      spark, p("lsh"), p("sc"), p("ep"), "id", "vec", opCol = Some("op"),
+      spark, p("lsh"), p("ep"), "id", "vec", opCol = Some("op"),
       dims = 4, threshold = 0.9, nbits = 4)
     val v = Seq(0.5f, 0.1f, -0.3f, 0.8f)
     fnE(Seq((1L, v, "UPSERT")).toDF("id", "vec", "op"), 0L)
@@ -359,13 +386,17 @@ class StreamingSpec extends SparkSpec {
     val pairs = spark.read.parquet(p("pairs"))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
-    // replaying epoch 1 overwrites its own partition — no duplicate pairs —
-    // and leaves the stores equal to themselves (mergeKeyed idempotence)
-    val sigsBefore = spark.read.parquet(p("sigs")).collect().toSet
+    // replaying epoch 1 overwrites its own pair partition and replaces its
+    // own rows in segment 1: both stores hold exactly the rows they held
+    // (a second copy would double a doc's shingle count and overlap)
+    def rows(n: String): Seq[String] =
+      spark.read.parquet(p(n)).collect().map(_.toString).toSeq.sorted
+    val (shBefore, sigsBefore) = (rows("shingles"), rows("sigs"))
     fn(Seq(2L -> base).toDF("doc_id", "text"), 1L)
     assert(spark.read.parquet(p("pairs"))
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet == Set((1L, 2L)))
-    assert(spark.read.parquet(p("sigs")).collect().toSet == sigsBefore)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSeq == Seq((1L, 2L)))
+    assert(rows("shingles") == shBefore)
+    assert(rows("sigs") == sigsBefore)
     // at-least-once delivery under a NEW epoch re-confirms the pair there
     // (the log is an event stream, not a table — documented contract);
     // reducing by (id_a, id_b) still yields the single live pair
@@ -373,50 +404,27 @@ class StreamingSpec extends SparkSpec {
     val byEpoch = spark.read.parquet(p("pairs"))
       .select("epoch", "id_a", "id_b").as[(Long, Long, Long)].collect().toSet
     assert(byEpoch == Set((1L, 1L, 2L), (2L, 1L, 2L)))
+    // a NEW query over the same stores restarts its epochs at 0 and passes
+    // segOffset = last segment + 1: its update of doc 2 (last claimed in
+    // segment 2) wins the reconcile, and its pair partitions land after
+    // the old query's, clobbering none
+    val restarted = StreamingDedup.nearDupBatch(
+      spark, p("shingles"), p("sigs"), p("pairs"),
+      "doc_id", "text", opCol = None, threshold = 0.5, segOffset = 3L)
+    val other = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    restarted(Seq(2L -> other).toDF("doc_id", "text"), 0L)
+    val (sh, _) = graft.streaming.IndexMaintenance.readDedupSegmentIndex(
+      spark, p("shingles"), p("sigs"), "doc_id")
+    val doc2 = sh.filter(col("doc_id") === 2L).select("sh").collect().map(_.get(0)).toSet
+    val want = graft.operators.Dedup.shingles(
+        Seq(2L -> other).toDF("doc_id", "text"), "doc_id", "text", 5)
+      .select("sh").collect().map(_.get(0)).toSet
+    assert(doc2 == want, "the restarted query's update must serve its fresh shingles")
+    restarted(Seq(4L -> other).toDF("doc_id", "text"), 1L)
+    assert(spark.read.parquet(p("pairs"))
+      .select("epoch", "id_a", "id_b").as[(Long, Long, Long)].collect().toSet ==
+      byEpoch + ((4L, 2L, 4L)))
     FileUtils.deleteDirectory(dir)
-  }
-
-  test("incremental merge rewrites only touched bucket directories") {
-    import org.apache.commons.io.FileUtils
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bktstate").toFile
-    val statePath = new java.io.File(dir, "state").getAbsolutePath
-    val merge = StreamingIngest.mergeIntoSnapshot(
-      spark, statePath, Seq("key"), "ts",
-      opCol = None, targetCol = Some("payload"), seqCol = Some("seq"))
-
-    def bkt(k: String): Int = spark.range(1)
-      .select(pmod(xxhash64(lit(k)), lit(64L)).cast("int")).head.getInt(0)
-    // the two keys must land in different buckets for the assertion to mean
-    // anything (deterministic hash — these two do; swap keys if ever changed)
-    assert(bkt("a") != bkt("b"), "pick keys hashing to different buckets")
-
-    def parquetCrcs(): Map[String, Long] =
-      FileUtils.listFiles(new java.io.File(statePath), Array("parquet"), true)
-        .asScala.map(f => f.getAbsolutePath -> FileUtils.checksumCRC32(f)).toMap
-
-    try {
-      merge(Seq(ev("a", 100, 0), ev("b", 100, 1)).toDF(), 0L)
-      val before = parquetCrcs()
-      val bBucketDir = s"${StreamingIngest.BucketCol}=${bkt("b")}"
-      assert(before.keys.exists(_.contains(bBucketDir)))
-
-      // batch 2 touches only key "a": b's bucket files must stay byte-identical
-      merge(Seq(ev("a", 200, 2)).toDF(), 1L)
-      val after = parquetCrcs()
-      val bBefore = before.filter(_._1.contains(bBucketDir))
-      val bAfter = after.filter(_._1.contains(bBucketDir))
-      assert(bAfter == bBefore, "untouched bucket was rewritten")
-      // a's bucket WAS rewritten (different file set or bytes)
-      val aBucketDir = s"${StreamingIngest.BucketCol}=${bkt("a")}"
-      assert(after.filter(_._1.contains(aBucketDir)) !=
-        before.filter(_._1.contains(aBucketDir)))
-      // and the merged state is correct
-      val state = spark.read.parquet(statePath)
-        .select(col("key"), col(Lww.TsCol).as("ts"))
-        .as[(String, Long)].collect().toMap
-      assert(state == Map("a" -> 200L, "b" -> 100L))
-    } finally FileUtils.deleteDirectory(dir)
   }
 
   test("gopher rule gate runs unchanged on a stream (stateless projection)") {
