@@ -1,20 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // explicit, not inherited from javaOptions: Tables.load's NTZ→instant
-      // ts normalization is timezone-dependent and must always run in UTC
-      .config("spark.sql.session.timeZone", "UTC")
-      // direct task commits: halves the per-directory rename cost of
-      // partitionBy index materialization (local FS, no job-abort risk)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+    val spark = GraftSession.local(cpus)
       // NOTE: don't shrink spark.sql.files.maxPartitionBytes here — the
       // fixture tables are single-row-group files, so smaller splits only
       // add empty partitions and overhead (measured +25% total)
@@ -42,10 +31,8 @@ object Bench {
     // warm the build-once index stores (LSH buckets, quantized projection) so
     // the timed loop measures probe cost only — the reference builds indexes
     // at ingest, not per query; IndexStorage logs rebuilt vs reused to stderr
-    SparkEntry.indexBackedQueries.foreach { n =>
-      SparkEntry.queries.get(n).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
+    SparkEntry.registry.filter(_.tags(QuerySpec.IndexBacked)).foreach { q =>
+      try q.build(spark, sfDir).count() catch { case _: Throwable => () }
     }
     // ---- host canary (VERDICT r12 #2) --------------------------------
     // A fixed pure-CPU loop and a fixed one-table scan, timed after warmup
@@ -81,9 +68,9 @@ object Bench {
     // trusted on a shared host — the r3 bench burned ~30s of host contention
     // in one alphabetical window and briefly looked like four regressions.
     // median≈min on a quiet machine; median>>min flags contention, not code.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
+    val results = SparkEntry.registry.sortBy(_.name)
+      .filter(q => only.forall(_.contains(q.name)))
+      .map { case QuerySpec(name, fn, _, _) =>
         val rebuildsBefore = graft.sources.IndexStorage.rebuilds.get()
         // one GC per query, before its first timed run: localCheckpoint
         // blocks (capped dedup/fuzzy paths) are only reclaimed by the
@@ -158,18 +145,8 @@ object Bench {
         .filter(d => new java.io.File(d, "lineitem.parquet").exists()))
       .filter(_ => sys.env.get("SPARK_GRAFT_SF1").forall(_ != "0") && only.isEmpty)
     val sf1Section: Option[String] = sf1Dir.map { dir =>
-      val subset = Seq(
-        // one per operator family, biased toward the shuffle/join-heavy
-        "q1_agg", "q5_region_revenue", "ann_cosine", "ann_lsh", "ann_ivfpq",
-        "ann_rescored", "bm25_multi", "dedup_exact", "dedup_minhash",
-        "dedup_embedding_lsh", "semantic_dedup", "semantic_dedup_capped",
-        "dedup_clusters",
-        "fuzzy_join", "fuzzy_join_exact", "decontamination_bloom",
-        "span_dedup", "gopher_report", "lm_score", "bpe_merges", "token_ids",
-        "stratified_sample", "pack_sequences", "pagerank", "hits_scores",
-        "heavy_hitters", "quantile_histogram", "asof_join", "rolling_stats",
-        "event_sessions_window", "hybrid_rrf", "knn_join_lsh", "image_features")
-        .filter(SparkEntry.queries.contains)
+      val subset = SparkEntry.tagged(QuerySpec.Sf1Bench)
+      val indexBacked = SparkEntry.tagged(QuerySpec.IndexBacked).toSet
       val budgetSec = sys.env.getOrElse("SPARK_GRAFT_SF1_BUDGET", "900").toDouble
       val t0All = System.nanoTime()
       def spent: Double = (System.nanoTime() - t0All) / 1e9
@@ -180,7 +157,7 @@ object Bench {
       // (which run against pre-built stores); build cost counts against
       // the budget and is reported separately
       val buildT0 = System.nanoTime()
-      subset.filter(SparkEntry.indexBackedQueries.contains).foreach { n =>
+      subset.filter(indexBacked).foreach { n =>
         if (spent < budgetSec * 0.6)
           try SparkEntry.queries(n)(spark, dir).count() catch { case _: Throwable => () }
       }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-step-beyond-local[32] evidence (VERDICT r9 #8): time the sf1
   * headline subset under BOTH `local[N]` (threads in one JVM — no
   * serialization across tasks, shuffle via memory/disk shortcuts) and
@@ -17,6 +15,8 @@ import org.apache.spark.sql.SparkSession
   * (a query that errors only here, or blows far past the local ratio)
   * are exactly the class of bug local[N] cannot see.
   *
+  * Times the Sf1Bench-tagged queries (Bench's sf1 section).
+  *
   * Usage: BenchCluster <sfDir> [outFile]
   * Env: SPARK_GRAFT_CLUSTER (default "local-cluster[2,16,8192]"),
   *      SPARK_GRAFT_LOCAL (default "local[32]"),
@@ -25,25 +25,14 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchCluster {
 
-  /** The Bench sf1-section subset — one query per operator family,
-    * biased toward the shuffle/join-heavy (kept in sync with Bench). */
-  val Subset: Seq[String] = Seq(
-    "q1_agg", "q5_region_revenue", "ann_cosine", "ann_lsh", "ann_ivfpq",
-    "ann_rescored", "bm25_multi", "dedup_exact", "dedup_minhash",
-    "dedup_embedding_lsh", "semantic_dedup", "dedup_clusters",
-    "fuzzy_join", "fuzzy_join_exact", "decontamination_bloom",
-    "span_dedup", "gopher_report", "lm_score", "bpe_merges", "token_ids",
-    "stratified_sample", "pack_sequences", "pagerank", "hits_scores",
-    "heavy_hitters", "quantile_histogram", "asof_join", "rolling_stats",
-    "event_sessions_window", "hybrid_rrf", "knn_join_lsh", "image_features")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outFile = args.lift(1)
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt)
     val subset = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSeq).getOrElse(Subset)
+      .map(_.split(",").toSeq).getOrElse(SparkEntry.tagged(QuerySpec.Sf1Bench))
       .filter(SparkEntry.queries.contains)
+    val indexBacked = SparkEntry.tagged(QuerySpec.IndexBacked).toSet
     val masters = Seq(
       "local" -> sys.env.getOrElse("SPARK_GRAFT_LOCAL", "local[32]"),
       "cluster" -> sys.env.getOrElse("SPARK_GRAFT_CLUSTER", "local-cluster[2,16,8192]"))
@@ -54,13 +43,7 @@ object BenchCluster {
     // The two masters need SEPARATE SparkContexts — run them sequentially,
     // stopping each before the next (one JVM, one live context at a time).
     val sections = masters.map { case (label, master) =>
-      val b = SparkSession.builder()
-        .master(master)
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+      val b = GraftSession.builder(master, shufflePartitions = "32")
       // executor processes need the application classes (operators,
       // custom expressions, lambdas run in tasks) — sbt's class dirs
       if (master.startsWith("local-cluster")) {
@@ -84,7 +67,7 @@ object BenchCluster {
             .select(upper(concat(lit("首尔 İI"), col("id").cast("string"))))
             .collect()
         }
-        subset.filter(SparkEntry.indexBackedQueries.contains).foreach { n =>
+        subset.filter(indexBacked).foreach { n =>
           try SparkEntry.queries(n)(spark, sfDir).count()
           catch { case _: Throwable => () }
         }

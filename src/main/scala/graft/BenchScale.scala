@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-decade spot sweep: time a shuffle-heavy query subset on a BASE
   * corpus and on a SCALED corpus (GenScale outputs, e.g. sf1 → sf10) in one
   * JVM, min-of-N each, and report per-query ratios against the data growth
@@ -19,27 +17,6 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchScale {
 
-  /** The shuffle-heaviest query families (VERDICT r8 item 1): iterative
-    * graph, candidate-explosion joins, signature stores, global merges. */
-  val DefaultSubset: Seq[String] = Seq(
-    "fuzzy_join", "fuzzy_join_exact", "knn_join_lsh", "knn_join_lsh_auto",
-    "knn_join_ivf", "knn_join_ivf_auto",
-    "hits_scores", "pagerank", "dedup_clusters", "dedup_minhash",
-    "semantic_dedup", "semantic_dedup_auto", "dedup_embedding_lsh",
-    "dedup_embedding_lsh_auto", "bpe_merges", "decontamination_bloom",
-    "decontamination_fixed_bench",
-    "knn_join_ivf_sqrt", "semantic_dedup_sqrt", "semantic_dedup_capped",
-    "dedup_clusters_best")
-
-  // Since round 10 the `_auto` occupancy-constant forms ARE the API
-  // defaults (the un-suffixed entry points route to them); the pinned
-  // `knn_join_lsh`/`dedup_embedding_lsh`/`semantic_dedup` rows here time
-  // the deterministic oracle variants, kept in the sweep as the recorded
-  // cost of the quadratic fixed-parameter shape. The sweep reads the one
-  // query map every other gate reads.
-  private def allQueries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    SparkEntry.queries
-
   def main(args: Array[String]): Unit = {
     val baseDir = args(0)
     val scaledDir = args(1)
@@ -48,16 +25,10 @@ object BenchScale {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt)
     val subset = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").toSeq).getOrElse(DefaultSubset)
-      .filter(allQueries.contains)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
+      .map(_.split(",").toSeq).getOrElse(SparkEntry.tagged(QuerySpec.ScaleSweep))
+      .filter(SparkEntry.queries.contains)
+    val indexBacked = SparkEntry.tagged(QuerySpec.IndexBacked).toSet
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def fmt(dec: Int)(d: Double): String =
@@ -76,8 +47,8 @@ object BenchScale {
           .collect()
       }
       val t0 = System.nanoTime()
-      subset.filter(SparkEntry.indexBackedQueries.contains).foreach { n =>
-        try allQueries(n)(spark, dir).count() catch { case _: Throwable => () }
+      subset.filter(indexBacked).foreach { n =>
+        try SparkEntry.queries(n)(spark, dir).count() catch { case _: Throwable => () }
       }
       (System.nanoTime() - t0) / 1e9
     }
@@ -89,7 +60,7 @@ object BenchScale {
         System.err.println(s"[graft] scale bench [$dir] $name run $i/$runs")
         val t0 = System.nanoTime()
         val ok =
-          try { allQueries(name)(spark, dir).count(); true }
+          try { SparkEntry.queries(name)(spark, dir).count(); true }
           catch { case e: Throwable =>
             System.err.println(s"[graft] scale bench FAILED: $name: ${e.getMessage}")
             false

@@ -1,22 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection helper: prints the formatted physical plan of selected
   * driver queries so pushdown/broadcast/TakeOrdered regressions are visible.
+  * With no names, the ExplainDefault-tagged queries.
   * Usage: runMain graft.Explain <sfDir> [queryName...] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.tail.toSeq else Seq(
-      "ann_euclidean", "ann_filtered", "q_join_agg", "q1_agg", "bm25_single")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val names = if (args.length > 1) args.tail.toSeq
+      else SparkEntry.tagged(QuerySpec.ExplainDefault)
+    val spark = GraftSession.local("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"========== $n ==========")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.ApproxAnn
 import graft.functions.VectorFunctions
@@ -48,13 +48,7 @@ object RecallScale {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
     val nQueries = sys.env.getOrElse("SPARK_GRAFT_RECALL_QUERIES", "200").toInt
     val k = sys.env.getOrElse("SPARK_GRAFT_RECALL_K", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -3,7 +3,6 @@ package graft
 import graft.api.HttpShell
 import graft.functions.VectorFunctions.{Cosine, Euclidean}
 import graft.operators.{ApproxAnn, Catalog, Engine}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Runnable service entry point: `runMain graft.Serve <sfDir> [port]` —
@@ -26,13 +25,7 @@ object Serve {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = Tables.load(spark, sfDir, "embeddings")

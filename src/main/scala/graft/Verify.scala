@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,30 +6,19 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query names (local iteration), or
-    // the literal `@sf1` — the scale-correctness gate's subset: every query
-    // EXCEPT the ones whose oracle is a deliberately-quadratic brute-force
-    // replay (SparkEntry.sf1OracleExclusions). The driver's sf0.01 run
-    // passes no third arg and always gets the full set.
+    // a scale gate's subset: `@sf1` = every query not tagged NoSf1Oracle
+    // (deliberately-quadratic brute-force replays), `@sf10` / `@sf100` =
+    // the Sf10Spot / Sf100Spot tags. The driver's sf0.01 run passes no
+    // third arg and always gets the full set.
     val only = args.lift(2).map {
-      case "@sf1" => SparkEntry.queries.keySet -- SparkEntry.sf1OracleExclusions
-      // the sf10 (100×) spot gate: linear-oracle family representatives
-      case "@sf10" => SparkEntry.sf10SpotQueries
-      // the sf100 (1000×) spot gate: the fourth measured decade
-      case "@sf100" => SparkEntry.sf100SpotQueries
+      case "@sf1" =>
+        SparkEntry.queries.keySet -- SparkEntry.tagged(QuerySpec.NoSf1Oracle)
+      case "@sf10" => SparkEntry.tagged(QuerySpec.Sf10Spot).toSet
+      case "@sf100" => SparkEntry.tagged(QuerySpec.Sf100Spot).toSet
       case csv => csv.split(",").toSet
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS); read as long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // direct task commits: halves the per-directory rename cost of
-      // partitionBy index materialization (local FS, no job-abort risk)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -56,13 +44,13 @@ object Verify {
     } + "\""
     // oracle_sql.json mirrors the DUMPED subset — an entry without its
     // parquet dir would read as a failure to the compare step.
-    // oracleSqlFor: the LSH `_auto` / `_sqrt` oracles inline parameters
-    // derived from THIS data directory's corpus count (deterministic
-    // replay) — invoked only when a dynamic-oracle query is in the dumped
+    // oracleSqlFor: the PerFixture oracles inline parameters derived from
+    // THIS data directory's corpus count (deterministic replay) — invoked
+    // only when a PerFixture-oracle query is in the dumped
     // subset, so a subset dump against a fixture WITHOUT an embeddings
     // table neither fails nor pays the count job.
     val needsDynamic =
-      only.forall(o => (o & SparkEntry.dynamicOracleQueries).nonEmpty)
+      only.forall(o => (o & SparkEntry.perFixtureOracles).nonEmpty)
     // a full dump against a fixture WITHOUT an embeddings table must
     // degrade to the static map (the per-query try above already skipped
     // the embedding queries), not lose the whole oracle file (ADVICE r10)
@@ -103,7 +91,7 @@ object Verify {
       // WITHOUT throwing and writes nothing; scale runs keep their
       // documented skip.)
       System.err.println(s"[verify] agreement gate failed: ${e.getMessage}")
-      val targets = dumpedSet & Set("knn_join_ivf_auto", "semantic_dedup_auto")
+      val targets = dumpedSet & SparkEntry.agreementGated
       if (targets.nonEmpty) {
         val err = VerifyAgreement.toJson(targets.map(_ -> Map(
           "gate_error" -> VerifyAgreement.Score(-1.0, 0.0))).toMap)

@@ -99,57 +99,60 @@ object VerifyAgreement {
     df.select(col("query_id"), col("vec_id")).as[(Long, Long)].collect().toSet
   }
 
-  /** Compute every applicable score for the dumped subset. Returns
-    * query -> metric -> score; empty when nothing applies (no embeddings
-    * table, corpus over [[MaxExactN]], or neither `_auto` query dumped). */
+  /** Compute every applicable score for the dumped subset: each dumped
+    * [[QuerySpec.AgreementGated]] query's scorer, run against its dumped
+    * result. Returns query -> metric -> score; empty when nothing applies
+    * (no embeddings table, corpus over [[MaxExactN]], or no gated query
+    * dumped). */
   def compute(spark: SparkSession, sfDir: String, outDir: String,
       dumped: Set[String]): Map[String, Map[String, Score]] = {
-    val targets = dumped & Set("knn_join_ivf_auto", "semantic_dedup_auto")
+    val targets = SparkEntry.registry.collect {
+      case QuerySpec(name, _, QuerySpec.AgreementGated(scores), _) if dumped(name) =>
+        name -> scores
+    }
     if (targets.isEmpty) return Map.empty
     val emb = Tables.load(spark, sfDir, "embeddings")
     val n = emb.filter(col("embedding").isNotNull).count()
     if (n == 0 || n > MaxExactN) return Map.empty
-    val spark2 = spark
-    import spark2.implicits._
+    targets.map { case (name, scores) =>
+      name -> scores(emb, n, spark.read.parquet(s"$outDir/$name"))
+    }.toMap
+  }
 
-    val ivf: Option[(String, Map[String, Score])] =
-      if (!targets("knn_join_ivf_auto")) None
-      else {
-        val dumpedPairs = pairSet(
-          spark.read.parquet(s"$outDir/knn_join_ivf_auto"))
-        // training is seeded-deterministic: this IS the dump's centroid set
-        val trained = ApproxAnn.trainIvfCentroids(
-          emb, "embedding", ApproxAnn.sqrtCells(n), nHint = Some(n))
-        val pinned = pairSet(ApproxAnn.knnJoinIvfPinned(
-          emb, "embedding", "vec_id", Euclidean, k = 3, trained, nprobe = 2))
-        val agree =
-          if (dumpedPairs.isEmpty && pinned.isEmpty) 1.0
-          else (dumpedPairs & pinned).size.toDouble / (dumpedPairs | pinned).size
-        val exact = pairSet(exactKnnPairs(emb, k = 3))
-        val recall =
-          if (exact.isEmpty) 1.0
-          else (dumpedPairs & exact).size.toDouble / exact.size
-        Some("knn_join_ivf_auto" -> Map(
-          "ivf_agreement_vs_pinned" -> Score(agree, 1.0),
-          "ivf_recall_vs_exact" -> Score(recall, 0.3)))
-      }
+  /** knn_join_ivf_auto's scores: agreement with the pinned join over the
+    * same trained centroids (training is seeded-deterministic, so this IS
+    * the dump's centroid set), and recall against the exact kNN. */
+  def ivfScores(emb: DataFrame, n: Long, dumped: DataFrame): Map[String, Score] = {
+    val dumpedPairs = pairSet(dumped)
+    val trained = ApproxAnn.trainIvfCentroids(
+      emb, "embedding", ApproxAnn.sqrtCells(n), nHint = Some(n))
+    val pinned = pairSet(ApproxAnn.knnJoinIvfPinned(
+      emb, "embedding", "vec_id", Euclidean, k = 3, trained, nprobe = 2))
+    val agree =
+      if (dumpedPairs.isEmpty && pinned.isEmpty) 1.0
+      else (dumpedPairs & pinned).size.toDouble / (dumpedPairs | pinned).size
+    val exact = pairSet(exactKnnPairs(emb, k = 3))
+    val recall =
+      if (exact.isEmpty) 1.0
+      else (dumpedPairs & exact).size.toDouble / exact.size
+    Map(
+      "ivf_agreement_vs_pinned" -> Score(agree, 1.0),
+      "ivf_recall_vs_exact" -> Score(recall, 0.3))
+  }
 
-    val sem: Option[(String, Map[String, Score])] =
-      if (!targets("semantic_dedup_auto")) None
-      else {
-        val dumpedKeep = spark.read.parquet(s"$outDir/semantic_dedup_auto")
-          .select(col("vec_id")).as[Long].collect().toSet
-        val trained = ApproxAnn.trainIvfCentroids(
-          emb, "embedding", ApproxAnn.sqrtCells(n), nHint = Some(n))
-        val refKeep = exactInCellKeep(emb, trained, eps = 0.4)
-        val agree =
-          if (dumpedKeep.isEmpty && refKeep.isEmpty) 1.0
-          else (dumpedKeep & refKeep).size.toDouble / (dumpedKeep | refKeep).size
-        Some("semantic_dedup_auto" -> Map(
-          "semdedup_agreement_vs_exact_incell" -> Score(agree, 1.0)))
-      }
-
-    (ivf ++ sem).toMap
+  /** semantic_dedup_auto's score: keep-set agreement with the exact
+    * in-cell replica over the same trained cells. */
+  def semanticDedupScores(emb: DataFrame, n: Long, dumped: DataFrame): Map[String, Score] = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val dumpedKeep = dumped.select(col("vec_id")).as[Long].collect().toSet
+    val trained = ApproxAnn.trainIvfCentroids(
+      emb, "embedding", ApproxAnn.sqrtCells(n), nHint = Some(n))
+    val refKeep = exactInCellKeep(emb, trained, eps = 0.4)
+    val agree =
+      if (dumpedKeep.isEmpty && refKeep.isEmpty) 1.0
+      else (dumpedKeep & refKeep).size.toDouble / (dumpedKeep | refKeep).size
+    Map("semdedup_agreement_vs_exact_incell" -> Score(agree, 1.0))
   }
 
   /** Render as the agreement.json the oracle-compare step merges into the

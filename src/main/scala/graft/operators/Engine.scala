@@ -219,9 +219,6 @@ final class Engine {
   def clearServingBackend(keyspace: String, index: String): Unit =
     servingBackends = servingBackends.removed(IndexKey(keyspace, index))
 
-  def clearApproxServing(keyspace: String, index: String): Unit =
-    clearServingBackend(keyspace, index)
-
   /** The attached backend's name ("exact" when none) — diagnostics. */
   def servingBackendName(keyspace: String, index: String): String =
     servingBackends.get(IndexKey(keyspace, index)).map(_.name).getOrElse("exact")
@@ -509,57 +506,6 @@ object Engine {
       ApproxAnn.searchLshAdaptive(cfg.indexed, base, meta.targetColumn,
         meta.primaryKeyColumns, space, req, cfg.nbits,
         cfg.radii, cfg.oversample, cfg.minCoverage)
-  }
-
-  /** Adaptive IVF over a centroid-assigned store
-    * ([[ApproxAnn.searchIvfAdaptive]]: probes escalate until candidate
-    * coverage certifies, exact-scan fallback otherwise). */
-  final case class IvfBackend(
-      assigned: DataFrame, centroids: Seq[(Int, Seq[Float])],
-      nprobes: Seq[Int] = Seq(1, 2, 4, 8),
-      oversample: Double = 2.0, minCoverage: Double = 0.9) extends AnnBackend {
-    val name = "ivf"
-    override def validate(meta: Catalog.IndexMetadata): Unit = {
-      val cols = assigned.columns.toSet
-      val needed = ("_centroid" +: meta.targetColumn +:
-        (meta.primaryKeyColumns ++ meta.allFilteringColumns)).distinct
-      val missing = needed.filterNot(cols.contains)
-      if (missing.nonEmpty)
-        throw new QueryException(400,
-          s"IVF store for ${meta.keyspace}/${meta.index} lacks column(s): ${missing.mkString(", ")}")
-      if (centroids.isEmpty)
-        throw new QueryException(400,
-          s"IVF backend for ${meta.keyspace}/${meta.index} has no centroids")
-    }
-    def search(base: DataFrame, meta: Catalog.IndexMetadata,
-        space: graft.functions.VectorFunctions.Space,
-        req: Ann.AnnRequest): DataFrame =
-      ApproxAnn.searchIvfAdaptive(assigned, base, meta.targetColumn,
-        meta.primaryKeyColumns, space, req, centroids,
-        nprobes, oversample, minCoverage)
-  }
-
-  /** Two-stage int8 rescoring over a quantized store
-    * ([[ApproxAnn.searchRescoredIndexed]]: stage 1 ranks on dequantized i8
-    * vectors, stage 2 exactly rescores the broadcast candidate set — the
-    * reference's quantization+rescoring serving mode as a backend). */
-  final case class RescoringBackend(quantized: DataFrame, oversample: Double = 5.0)
-      extends AnnBackend {
-    val name = "i8-rescore"
-    override def validate(meta: Catalog.IndexMetadata): Unit = {
-      val cols = quantized.columns.toSet
-      val needed = ("_q" +:
-        (meta.primaryKeyColumns ++ meta.allFilteringColumns)).distinct
-      val missing = needed.filterNot(cols.contains)
-      if (missing.nonEmpty)
-        throw new QueryException(400,
-          s"quantized store for ${meta.keyspace}/${meta.index} lacks column(s): ${missing.mkString(", ")}")
-    }
-    def search(base: DataFrame, meta: Catalog.IndexMetadata,
-        space: graft.functions.VectorFunctions.Space,
-        req: Ann.AnnRequest): DataFrame =
-      ApproxAnn.searchRescoredIndexed(quantized, base, meta.targetColumn,
-        meta.primaryKeyColumns, space, req, oversample)
   }
 }
 

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, QuerySpec, SparkEntry, Tables}
 
 /** Attribute the sf1 index-store build time per store (VERDICT r12 #6:
   * the driver's `sf1_build_sec` went 14.9 → 57.5 s across r11→r12 with a
@@ -20,28 +19,13 @@ object ProfileBuild {
     val dir = args(0)
     val keep = args.contains("--keep")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // mirror of Bench's sf1 subset (the store-warm loop filters it the
-    // same way); keep in sync with Bench.scala
-    val sf1Subset = Seq(
-      "q1_agg", "q5_region_revenue", "ann_cosine", "ann_lsh", "ann_ivfpq",
-      "ann_rescored", "bm25_multi", "dedup_exact", "dedup_minhash",
-      "dedup_embedding_lsh", "semantic_dedup", "semantic_dedup_capped",
-      "dedup_clusters",
-      "fuzzy_join", "fuzzy_join_exact", "decontamination_bloom",
-      "span_dedup", "gopher_report", "lm_score", "bpe_merges", "token_ids",
-      "stratified_sample", "pack_sequences", "pagerank", "hits_scores",
-      "heavy_hitters", "quantile_histogram", "asof_join", "rolling_stats",
-      "event_sessions_window", "hybrid_rrf", "knn_join_lsh", "image_features")
-    val buildSet = sf1Subset.filter(SparkEntry.indexBackedQueries.contains)
+    // the bench's sf1 store-warm set: the index-backed Sf1Bench queries
+    val buildSet = SparkEntry.registry
+      .filter(q => q.tags(QuerySpec.Sf1Bench) && q.tags(QuerySpec.IndexBacked))
+      .map(_.name)
 
     val storeRoot = new java.io.File(
       s"${sys.props("java.io.tmpdir")}/graft-indexes/${new java.io.File(dir).getName}")

@@ -131,7 +131,7 @@ class EngineSpec extends SparkSpec {
       .select("pk").as[Int].collect().toSeq
     assert(filtered.length == 3 && filtered.forall(_ % 7 == 3))
     // config is per-index and removable
-    e.clearApproxServing("ks", "ann_a")
+    e.clearServingBackend("ks", "ann_a")
     assert(e.ann("ks", "ann_a", AnnRequest(vec(3), limit = 5))
       .select("pk", "distance").as[(Int, Double)].collect().toSeq == exact)
     assert(intercept[QueryException] {
@@ -156,7 +156,7 @@ class EngineSpec extends SparkSpec {
     assert(e.counters().getOrElse("ann-approx-queries", 0L) == approxCount) // exact route
   }
 
-  test("pluggable backend seam: IVF backend serves through the same routed taxonomy") {
+  test("pluggable backend seam: LSH backend serves through the same routed taxonomy") {
     def vec(seed: Int): Seq[Float] =
       (0 until 16).map(d => math.sin(seed * 2.1 + d * 0.7).toFloat)
     val df = (1 to 40).map(i => (i, vec(i), i % 7)).toDF("pk", "embedding", "c1")
@@ -169,46 +169,31 @@ class EngineSpec extends SparkSpec {
     val exact = e.ann("ks", "ann_i", AnnRequest(vec(3), limit = 5))
       .select("pk", "distance").as[(Int, Double)].collect().toSeq
 
-    val (assigned, centroids) = ApproxAnn.buildIvfIndex(df, "embedding", k = 4)
-    e.setServingBackend("ks", "ann_i", Engine.IvfBackend(assigned, centroids))
-    assert(e.servingBackendName("ks", "ann_i") == "ivf")
+    val cfg = Engine.ApproxServing(
+      ApproxAnn.buildLshIndex(df, "embedding", nbits = 8, dims = 16), nbits = 8)
+    e.setServingBackend("ks", "ann_i", Engine.LshBackend(cfg))
+    assert(e.servingBackendName("ks", "ann_i") == "lsh")
     // the adaptive probe either certifies coverage or falls back exact —
     // either way the routed answer matches the direct operator call
     val viaEngine = e.ann("ks", "ann_i", AnnRequest(vec(3), limit = 5))
       .select("pk", "distance").as[(Int, Double)].collect().toSeq
-    val direct = ApproxAnn.searchIvfAdaptive(assigned, df, "embedding",
-        Seq("pk"), Euclidean, AnnRequest(vec(3), limit = 5), centroids)
+    val direct = ApproxAnn.searchLshAdaptive(cfg.indexed, df, "embedding",
+        Seq("pk"), Euclidean, AnnRequest(vec(3), limit = 5), cfg.nbits)
       .select("pk", "distance").as[(Int, Double)].collect().toSeq
     assert(viaEngine == direct)
-    assert(viaEngine.map(_._1).toSet.subsetOf(exact.map(_._1).toSet ++ viaEngine.map(_._1)))
     // taxonomy is the Engine's, not the backend's: wrong dims still 400
     assert(intercept[QueryException] {
       e.ann("ks", "ann_i", AnnRequest(Seq(0f, 1f)))
     }.status == 400)
-    // attach-time validation: a store without _centroid is rejected at SET
+    // attach-time validation: a store without _bucket is rejected at SET
     assert(intercept[QueryException] {
-      e.setServingBackend("ks", "ann_i", Engine.IvfBackend(df, centroids))
-    }.status == 400)
-    assert(intercept[QueryException] {
-      e.setServingBackend("ks", "ann_i", Engine.IvfBackend(assigned, Nil))
+      e.setServingBackend("ks", "ann_i", Engine.LshBackend(Engine.ApproxServing(df, 8)))
     }.status == 400)
     // detach restores the exact path
     e.clearServingBackend("ks", "ann_i")
     assert(e.servingBackendName("ks", "ann_i") == "exact")
     assert(e.ann("ks", "ann_i", AnnRequest(vec(3), limit = 5))
       .select("pk", "distance").as[(Int, Double)].collect().toSeq == exact)
-
-    // the i8-rescoring backend plugs into the SAME seam: stage-2 exact
-    // rescore means the top-k pk set matches the exact answer here
-    val quantized = ApproxAnn.quantizedProjection(df, "embedding", Seq("pk"), Seq("c1"))
-    e.setServingBackend("ks", "ann_i", Engine.RescoringBackend(quantized))
-    assert(e.servingBackendName("ks", "ann_i") == "i8-rescore")
-    val rescored = e.ann("ks", "ann_i", AnnRequest(vec(3), limit = 5))
-      .select("pk", "distance").as[(Int, Double)].collect().toSeq
-    assert(rescored == exact)
-    assert(intercept[QueryException] {
-      e.setServingBackend("ks", "ann_i", Engine.RescoringBackend(df)) // no _q
-    }.status == 400)
   }
 
   test("routing: requested index wins at equal (score, version) within its group") {

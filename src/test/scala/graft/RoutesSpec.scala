@@ -66,7 +66,7 @@ class RoutesSpec extends SparkSpec {
     eng.setApproxServing("ks", "vidx", Engine.ApproxServing(
       graft.operators.ApproxAnn.buildLshIndex(df, "vec", 8, 64), 8))
     assert(backend() == "lsh")
-    eng.clearApproxServing("ks", "vidx")
+    eng.clearServingBackend("ks", "vidx")
     assert(backend() == "exact") // detach restores serving reality
     // fulltext info has no backend field — the seam is vector-only
     val fts = om.readTree(Routes.handle(eng, "GET", "/api/v1/indexes/ks/fidx").body)
