@@ -19,6 +19,13 @@ import org.apache.spark.sql.functions.col
   *    approximate default, like the reference's usearch index, with the
   *    coverage-certified exact fallback — unless `SPARK_GRAFT_EXACT=1`
   *  - `fts/doc_text` — BM25 over documents
+  *
+  * Every index here fits under the resident cap at the fixture sizes
+  * (sf0.01 to sf1; [[graft.operators.Resident.cap]]), so each is collected
+  * into memory by its first request and answered from there: warm ANN and
+  * BM25 requests start no Spark job, and the LSH store serves through the
+  * in-memory replay of its adaptive decision. A corpus above the cap is
+  * served by the Spark plans unchanged.
   */
 object Serve {
   def main(args: Array[String]): Unit = {

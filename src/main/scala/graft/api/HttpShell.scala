@@ -21,8 +21,20 @@ import java.nio.charset.StandardCharsets
   * harness `httpserver.rs:450`), `stop` releases the listener. Handlers run
   * on a small fixed pool; each request dispatches through [[Routes.handle]]
   * and returns its status + JSON body verbatim.
+  *
+  * TCP_NODELAY: this object's initializer sets the JDK property
+  * `sun.net.httpserver.nodelay=true` (unless already set) before its first
+  * `HttpServer.create`. The JDK reads it once, when its server
+  * configuration class initializes, so it must be set before any
+  * `HttpServer` exists in the JVM. Without it a reply written in two
+  * segments (headers, then body) to a keep-alive client waits on Nagle's
+  * algorithm meeting the client's delayed ACK: about 40 ms per request on
+  * loopback.
   */
 object HttpShell {
+
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
 
   final case class Server(underlying: HttpServer,
       pool: java.util.concurrent.ExecutorService) {

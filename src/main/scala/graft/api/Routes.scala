@@ -365,7 +365,7 @@ object Routes {
           // response serializer) — what the reference's axum layer times
           val t0 = System.nanoTime()
           // store fence read side around plan + collect: a maintenance
-          // commit (bucket rewrite / segment fold) can never interleave
+          // commit (segment append / fold) can never interleave
           // with this request's scan (Engine.withQuiescedRead)
           val json = engine.withQuiescedRead(ks, idx) {
             val res = engine.ann(ks, idx, req)

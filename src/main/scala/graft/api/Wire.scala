@@ -288,23 +288,25 @@ object Wire {
 
   /** Encode a `PostIndexAnnResponse`: columnar primary keys (typed through
     * try_to_json), f32-saturated distances and similarity scores, element
-    * order = ascending (distance, pk…) — the transpose ResultFormat pins. */
+    * order = ascending (distance, pk…) — the order and saturation
+    * `ResultFormat.transpose` pins, applied on the driver to the ≤k
+    * collected rows ([[ResultFormat.transposedRows]]). */
   def annResponseJson(
       results: DataFrame, pkCols: Seq[String],
       types: Map[String, NativeType]): String = {
-    val row = ResultFormat.transpose(results, pkCols).head()
+    val rows = ResultFormat.transposedRows(results, pkCols)
     val root = mapper.createObjectNode()
     val pks = root.putObject("primary_keys")
-    pkCols.foreach { c =>
+    pkCols.zipWithIndex.foreach { case (c, j) =>
       val arr = pks.putArray(c)
-      row.getSeq[Any](row.fieldIndex(s"pk_$c")).foreach { v =>
-        arr.add(valueNode(JsonValues.toJson(normalize(v), colType(types, c))))
+      rows.foreach { r =>
+        arr.add(valueNode(JsonValues.toJson(normalize(r.get(j + 1)), colType(types, c))))
       }
     }
-    def floats(field: String, arr: ArrayNode): Unit =
-      row.getSeq[Double](row.fieldIndex(field)).foreach(d => addSaturated(arr, d))
-    floats("distances", root.putArray("distances"))
-    floats("similarity_scores", root.putArray("similarity_scores"))
+    def floats(field: Int, arr: ArrayNode): Unit =
+      rows.foreach(r => addSaturated(arr, ResultFormat.saturateValue(r.get(field))))
+    floats(0, root.putArray("distances"))
+    floats(pkCols.length + 1, root.putArray("similarity_scores"))
     mapper.writeValueAsString(root)
   }
 
@@ -313,7 +315,7 @@ object Wire {
   def bm25ResponseJson(
       results: DataFrame, pkCol: String,
       types: Map[String, NativeType]): String = {
-    val rows = results.collect()
+    val rows = ResultFormat.collectRows(results)
     val root = mapper.createObjectNode()
     val pks = root.putObject("primary_keys").putArray(pkCol)
     val scores = root.putArray("scores")

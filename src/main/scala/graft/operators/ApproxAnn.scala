@@ -146,10 +146,16 @@ object ApproxAnn {
     flips(0L, 0, radius).distinct
   }
 
+  /** [[hyperplanes]] per (nbits, dims): each takes nbits·dims md5 digests, and
+    * every served LSH request needs one. Never handed out (read only). */
+  private val planeCache =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Array[Double]]]()
+
   /** Query-side probe set: the query's bucket plus all buckets within
     * Hamming distance `radius` (multi-probe). */
   def probeBuckets(queryVec: Seq[Float], nbits: Int, radius: Int): Seq[Long] = {
-    val planes = hyperplanes(nbits, queryVec.length)
+    val planes = planeCache.computeIfAbsent((nbits, queryVec.length),
+      k => hyperplanes(k._1, k._2))
     val base = planes.zipWithIndex.map { case (w, j) =>
       val proj = queryVec.zip(w).map { case (x, y) => x.toDouble * y }.sum
       if (proj > 0) 1L << j else 0L
@@ -195,7 +201,6 @@ object ApproxAnn {
       indexed: DataFrame, vecCol: String, req: AnnRequest, nbits: Int,
       radii: Seq[Int] = DefaultAdaptiveRadii, oversample: Double = 2.0,
       minCoverage: Double = 0.9): Option[Int] = {
-    val need = math.max(req.limit.toLong, math.ceil(req.limit * oversample).toLong)
     val pred = RestrictionCompiler.compileAll(indexed.schema, req.restrictions)
     val qb = probeBuckets(req.vector, nbits, 0).head
     val hd = expr(s"bit_count(_bucket ^ ${qb}L)")
@@ -206,10 +211,20 @@ object ApproxAnn {
       .filter(col(vecCol).isNotNull && pred)
       .agg(aggs.head, aggs.tail: _*)
       .head()
-    val total = row.getLong(radii.length)
-    radii.zipWithIndex.collectFirst {
-      case (r, i) if row.getLong(i) >= need &&
-        row.getLong(i).toDouble >= minCoverage * total => r
+    firstQualifyingRadius(radii, radii.indices.map(row.getLong),
+      row.getLong(radii.length), req.limit, oversample, minCoverage)
+  }
+
+  /** The rule of [[chooseLshRadius]] over its counts: `within(i)` matching
+    * rows lie within Hamming radius `radii(i)` of the query's bucket,
+    * `total` match in all. Resident snapshots count from memory and
+    * decide with this same rule. */
+  private[graft] def firstQualifyingRadius(
+      radii: Seq[Int], within: Seq[Long], total: Long, limit: Int,
+      oversample: Double, minCoverage: Double): Option[Int] = {
+    val need = math.max(limit.toLong, math.ceil(limit * oversample).toLong)
+    radii.zip(within).collectFirst {
+      case (r, m) if m >= need && m.toDouble >= minCoverage * total => r
     }
   }
 

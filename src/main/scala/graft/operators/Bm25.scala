@@ -142,6 +142,17 @@ object Bm25 {
       .select(col(index.idCol), col("term"), col("term_score"))
   }
 
+  /** One (doc, term) partial score of [[termScores]] on plain values, the
+    * same operations in the same order: `n` documents, the term in `df` of
+    * them, `tf` times in this one of length `dl`, mean length `avgdl`.
+    * Spark's LOG is `StrictMath.log`. */
+  private[graft] def termScore(n: Double, df: Double, tf: Long, dl: Int, avgdl: Double): Double = {
+    val idf = StrictMath.log(1.0 + (n - df + 0.5) / (df + 0.5))
+    val tfNorm = (tf.toDouble * (K1 + 1.0)) /
+      (tf.toDouble + K1 * ((1.0 - B) + B * dl.toDouble / avgdl))
+    idf * tfNorm
+  }
+
   // ---- phrase queries (F11) ------------------------------------------------
 
   /** Positional postings (tantivy indexes WithFreqsAndPositions,

@@ -175,6 +175,7 @@ final class Engine {
     // store would silently serve stale rows; re-attach explicitly after
     // rebuild
     servingBackends = servingBackends.removed(meta.key)
+    invalidate(meta.key)
   }
 
   @volatile private var segmentCounts: Map[IndexKey, Int] = Map.empty
@@ -208,6 +209,7 @@ final class Engine {
       throw new QueryException(404, s"index $keyspace/$index not found"))
     backend.validate(meta)
     servingBackends = servingBackends.updated(key, backend)
+    invalidate(key)
   }
 
   /** Convenience for the adaptive-LSH backend (the serving default the
@@ -216,8 +218,11 @@ final class Engine {
   def setApproxServing(keyspace: String, index: String, cfg: Engine.ApproxServing): Unit =
     setServingBackend(keyspace, index, Engine.LshBackend(cfg))
 
-  def clearServingBackend(keyspace: String, index: String): Unit =
-    servingBackends = servingBackends.removed(IndexKey(keyspace, index))
+  def clearServingBackend(keyspace: String, index: String): Unit = {
+    val key = IndexKey(keyspace, index)
+    servingBackends = servingBackends.removed(key)
+    invalidate(key)
+  }
 
   /** The attached backend's name ("exact" when none) — diagnostics. */
   def servingBackendName(keyspace: String, index: String): String =
@@ -240,10 +245,13 @@ final class Engine {
       _ => new java.util.concurrent.locks.ReentrantReadWriteLock(true))
 
   /** Run a maintenance commit (segment append, segment fold) against the
-    * index's store under the WRITE side of the store fence. */
+    * index's store under the WRITE side of the store fence. The index's
+    * resident snapshot is dropped before the fence opens again: no read
+    * after a commit is answered from rows collected before it. */
   def withMaintenance[T](keyspace: String, index: String)(commit: => T): T = {
-    val l = fence(IndexKey(keyspace, index)).writeLock()
-    l.lock(); try commit finally l.unlock()
+    val key = IndexKey(keyspace, index)
+    val l = fence(key).writeLock()
+    l.lock(); try commit finally { invalidate(key); l.unlock() }
   }
 
   /** Execute a serving ACTION under the READ side of the store fence.
@@ -297,10 +305,67 @@ final class Engine {
     frames = frames.removed(key)
     servingBackends = servingBackends.removed(key) // never outlive the index data
     segmentCounts = segmentCounts.removed(key)
+    invalidate(key)
     catalog.remove(key)
   }
 
-  /** Routed, validated ANN search — the whole §3.1 lifecycle. */
+  // ---- resident snapshots (Resident) ----------------------------------------
+  // An index small enough for the driver is answered from memory. Its
+  // snapshot is built by the first request that needs it, inside that
+  // request's read fence, and dropped by every change to what the index
+  // serves: addIndex, dropIndex, attaching or clearing a backend, and the
+  // end of each withMaintenance commit. Each change bumps the key's epoch;
+  // a snapshot built under an older epoch is never handed out again, so a
+  // build racing an unfenced change (addIndex) cannot outlive it.
+
+  /** One epoch's snapshot, built at most once (the lazy val's lock makes
+    * concurrent first requests wait for one build). */
+  private final class Holder(val epoch: Long, build: => Option[Resident.Snapshot]) {
+    lazy val snapshot: Option[Resident.Snapshot] = build
+  }
+  private val holders = new java.util.concurrent.ConcurrentHashMap[IndexKey, Holder]()
+  private val epochs = new java.util.concurrent.ConcurrentHashMap[IndexKey, java.lang.Long]()
+
+  private def invalidate(key: IndexKey): Unit = {
+    epochs.merge(key, 1L, (a: java.lang.Long, b: java.lang.Long) => a + b)
+    holders.remove(key)
+    ()
+  }
+
+  /** The key's snapshot for the current epoch, built by `build` if absent;
+    * None when the index is served by its Spark plan. */
+  private def resident(key: IndexKey)(build: => Option[Resident.Snapshot])
+      : Option[Resident.Snapshot] = {
+    val epoch: Long = epochs.getOrDefault(key, 0L)
+    holders.compute(key, (_, h) =>
+      if (h != null && h.epoch == epoch) h else new Holder(epoch, build)).snapshot
+  }
+
+  private def residentAnn(meta: IndexMetadata, options: IndexOptionsVs,
+      backend: Option[Engine.AnnBackend]): Option[Resident.AnnSnapshot] =
+    resident(meta.key) {
+      val base = frameOr404(meta.key)
+      def collect(df: DataFrame, bucketed: Boolean) =
+        Resident.Vectors.collect(df, meta, options.space, options.dims, bucketed)
+      backend match {
+        case None => collect(base, bucketed = false).map(Resident.AnnSnapshot(_, None))
+        case Some(Engine.LshBackend(cfg)) if cfg.indexed eq base =>
+          collect(base, bucketed = true).map(v => Resident.AnnSnapshot(v, Some(cfg -> v)))
+        case Some(Engine.LshBackend(cfg)) =>
+          for (b <- collect(base, bucketed = false); s <- collect(cfg.indexed, bucketed = true))
+            yield Resident.AnnSnapshot(b, Some(cfg -> s))
+        case Some(_) => None
+      }
+    }.collect { case a: Resident.AnnSnapshot => a }
+
+  private def residentText(meta: IndexMetadata): Option[Resident.Text] =
+    resident(meta.key) {
+      Resident.Text.collect(frameOr404(meta.key), meta.primaryKeyColumns.head, meta.targetColumn)
+    }.collect { case t: Resident.Text => t }
+
+  /** Routed, validated ANN search — the whole §3.1 lifecycle. A resident
+    * index ([[Resident]]) is ranked in memory and comes back as a local
+    * frame; a larger one, or a backend other than LSH, as its Spark plan. */
   def ann(keyspace: String, index: String, req: AnnRequest): DataFrame = {
     val (eqCols, rangeCols) = RestrictionCompiler.splitColumns(req.restrictions)
     catalog.bestIndex(IndexKey(keyspace, index), eqCols, rangeCols) match {
@@ -320,12 +385,18 @@ final class Engine {
         }
         recordQuery(meta.key)
         incrementCounter("ann-queries")
-        try servingBackends.get(meta.key) match {
-          case Some(backend) =>
-            val options = Ann.validate(meta, req)
-            incrementCounter("ann-approx-queries")
-            backend.search(frameOr404(meta.key), meta, options.space, req)
-          case None => Ann.search(frameOr404(meta.key), meta, req)
+        try {
+          val backend = servingBackends.get(meta.key)
+          val options = Ann.validate(meta, req)
+          if (backend.isDefined) incrementCounter("ann-approx-queries")
+          residentAnn(meta, options, backend).flatMap(_.search(req)).getOrElse {
+            val base = frameOr404(meta.key)
+            backend match {
+              case Some(b) => b.search(base, meta, options.space, req)
+              case None =>
+                Ann.plan(base, meta.targetColumn, meta.primaryKeyColumns, options.space, req)
+            }
+          }
         } catch {
           case e: Ann.AnnValidationException => throw new QueryException(400, e.getMessage)
         }
@@ -333,7 +404,8 @@ final class Engine {
   }
 
   /** Routed BM25 search (no routing groups / no filters for FTS —
-    * httproutes.rs:975-1009). */
+    * httproutes.rs:975-1009), from the resident postings when the index
+    * fits ([[Resident.Text]]), else by [[Bm25.search]]. */
   def bm25(keyspace: String, index: String, query: String, limit: Int): DataFrame = {
     val key = IndexKey(keyspace, index)
     catalog.get(key) match {
@@ -345,8 +417,9 @@ final class Engine {
           case Fts(_) =>
             recordQuery(key)
             incrementCounter("bm25-queries")
-            Bm25.search(frameOr404(key), e.meta.primaryKeyColumns.head,
-              e.meta.targetColumn, query, limit)
+            residentText(e.meta).flatMap(_.search(query, limit)).getOrElse(
+              Bm25.search(frameOr404(key), e.meta.primaryKeyColumns.head,
+                e.meta.targetColumn, query, limit))
           case _ => throw new QueryException(400, s"index $keyspace/$index is not an FTS index")
         }
     }
@@ -519,6 +592,44 @@ object ResultFormat {
 
   def saturate(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     least(greatest(c, lit(-FloatMax)), lit(FloatMax))
+
+  /** [[saturate]] on one collected value, as Spark evaluates it: `greatest`
+    * skips a null (→ -FloatMax) and NaN orders above every double
+    * (→ FloatMax). */
+  def saturateValue(d: Any): Double = d match {
+    case null => -FloatMax
+    case n: java.lang.Number =>
+      val v = n.doubleValue
+      if (v.isNaN || v > FloatMax) FloatMax else if (v < -FloatMax) -FloatMax else v
+  }
+
+  /** The rows of a result frame. A resident reply is a `LocalRelation`
+    * ([[Resident]]): its rows are converted as they are, with no planning or
+    * execution; any other frame is collected. */
+  def collectRows(results: DataFrame): Array[org.apache.spark.sql.Row] =
+    results.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(results.schema)
+        l.data.map(r => toScala(r).asInstanceOf[org.apache.spark.sql.Row]).toArray
+      case _ => results.collect()
+    }
+
+  /** The rows of [[transpose]]'s array, on the driver: each result row's
+    * (`distance`, `pkCols…`, `similarity`), sorted ascending by Catalyst's
+    * struct ordering as `sort_array` sorts them — no aggregate job. */
+  def transposedRows(results: DataFrame, pkCols: Seq[String]): Array[org.apache.spark.sql.Row] = {
+    val names = "distance" +: pkCols :+ "similarity"
+    val schema = org.apache.spark.sql.types.StructType(names.map(results.schema(_)))
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(schema)
+    val ord = org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
+      .forSchema(schema.map(_.dataType))
+    collectRows(results)
+      .map(r => org.apache.spark.sql.Row.fromSeq(names.map(n => r.get(r.fieldIndex(n)))))
+      .map(r => (toCatalyst(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow], r))
+      .sortWith((a, b) => ord.lt(a._1, b._1)).map(_._2)
+  }
 
   /** One-row DataFrame with one array column per pk column plus `distances`
     * and `similarity_scores`, element order = ascending (distance, pk…). */

@@ -1,7 +1,12 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's `private[sql]` Column ↔ Expression conversions —
   * the supported extension-point pattern for libraries that define native
@@ -25,4 +30,17 @@ object GraftSqlBridge {
     * serving session must not accumulate blocks per query). */
   def cacheManagerEmpty(spark: SparkSession): Boolean =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
+
+  /** A frame over rows already in Catalyst's internal form (a
+    * `LocalRelation`): collecting it runs no Spark job. */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** Collect a frame's rows in Catalyst's internal form (no conversion to
+    * external `Row`s), as one tracked SQL execution like `collect()`. */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collectInternal"))(qe.executedPlan.executeCollect())
+  }
 }

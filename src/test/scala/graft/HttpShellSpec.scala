@@ -116,4 +116,12 @@ class HttpShellSpec extends SparkSpec {
     try assert(again.port == port)
     finally again.stop()
   }
+
+  test("the shell turns on TCP_NODELAY before the JVM's first HttpServer") {
+    // the JDK reads sun.net.httpserver.nodelay once, when its server
+    // configuration initializes; HttpShell sets it in its initializer
+    val shell = HttpShell.start(engineFixture())
+    try assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+    finally shell.stop()
+  }
 }

@@ -126,4 +126,8 @@ if json_out:
         json.dump(artifact, f, indent=2, sort_keys=True)
     print(f"artifact -> {json_out}")
 print(f"{'ALL OK' if fails == 0 else f'{fails} FAILURES'} / {len(oracle)} queries")
+# close the connection before exiting: DuckDB's threads torn down at
+# interpreter exit with a live connection can abort the process
+# ("terminate called without an active exception")
+con.close()
 sys.exit(1 if fails else 0)
