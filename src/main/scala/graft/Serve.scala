@@ -20,12 +20,12 @@ import org.apache.spark.sql.functions.col
   *    coverage-certified exact fallback — unless `SPARK_GRAFT_EXACT=1`
   *  - `fts/doc_text` — BM25 over documents
   *
-  * Every index here fits under the resident cap at the fixture sizes
-  * (sf0.01 to sf1; [[graft.operators.Resident.cap]]), so each is collected
-  * into memory by its first request and answered from there: warm ANN and
-  * BM25 requests start no Spark job, and the LSH store serves through the
-  * in-memory replay of its adaptive decision. A corpus above the cap is
-  * served by the Spark plans unchanged.
+  * Every index here fits the resident budget at the fixture sizes (sf0.01
+  * to sf1; [[graft.operators.Resident.Budget]]), so each is collected into
+  * memory by its first request and answered from there: warm ANN and BM25
+  * requests start no Spark job, and the LSH store serves through the
+  * in-memory replay of its adaptive decision. A corpus over the budget
+  * brings no row to the driver and is served by the Spark plans unchanged.
   */
 object Serve {
   def main(args: Array[String]): Unit = {

@@ -304,7 +304,7 @@ object Wire {
       }
     }
     def floats(field: Int, arr: ArrayNode): Unit =
-      rows.foreach(r => addSaturated(arr, ResultFormat.saturateValue(r.get(field))))
+      rows.foreach(r => addSaturated(arr, r.getDouble(field)))
     floats(0, root.putArray("distances"))
     floats(pkCols.length + 1, root.putArray("similarity_scores"))
     mapper.writeValueAsString(root)

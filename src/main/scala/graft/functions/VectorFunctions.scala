@@ -96,15 +96,6 @@ object VectorFunctions {
     case Hamming => lit(1.0) - dist / lit(dims.toDouble)
   }
 
-  /** [[similarity]] on one value, the same operations in the same order
-    * (no divisor here can be zero for a distance its space produces, so
-    * Spark's divide-by-zero rule never applies). */
-  def similarityOf(space: Space, dist: Double, dims: Int): Double = space match {
-    case Cosine | DotProduct => (2.0 - dist) / 2.0
-    case Euclidean => 1.0 / (1.0 + dist)
-    case Hamming => 1.0 - dist / dims.toDouble
-  }
-
   /** B1 bit-packing: f32 vector → packed bytes, bit i of byte i/8 set iff
     * v(i) > 0, little-endian within the byte (usearch.rs:1179-1205). */
   def b1Pack(a: Column): Column = {

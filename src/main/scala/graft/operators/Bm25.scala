@@ -111,7 +111,11 @@ object Bm25 {
     * (fts_index/tantivy.rs term dictionary lookups). The Spark-native
     * equivalent: one narrow pruned aggregate at query-build time (reads only
     * the term column of the matching rows), embedded as a literal map so the
-    * scoring plan carries no second postings subtree. */
+    * scoring plan carries no second postings subtree.
+    *
+    * The `idf * tfNorm` formula has a scalar twin, [[termScore]], which the
+    * resident postings ([[Resident.Text]]) score with once per posting:
+    * change the two together. */
   private[graft] def termScores(index: Index, terms: Seq[String]): DataFrame = {
     // corpus stats: one tiny row, broadcast everywhere
     val stats = index.docLens.agg(
@@ -145,7 +149,10 @@ object Bm25 {
   /** One (doc, term) partial score of [[termScores]] on plain values, the
     * same operations in the same order: `n` documents, the term in `df` of
     * them, `tf` times in this one of length `dl`, mean length `avgdl`.
-    * Spark's LOG is `StrictMath.log`. */
+    * Spark's LOG is `StrictMath.log`. The twin of [[termScores]]'s Column
+    * formula, kept as scalar code because it runs once per posting: change
+    * the two together (`ResidentSpec` compares their replies byte for
+    * byte). */
   private[graft] def termScore(n: Double, df: Double, tf: Long, dl: Int, avgdl: Double): Double = {
     val idf = StrictMath.log(1.0 + (n - df + 0.5) / (df + 0.5))
     val tfNorm = (tf.toDouble * (K1 + 1.0)) /

@@ -23,8 +23,11 @@ import org.apache.spark.sql.types.{DataType, StructField}
 final class QueryException(val status: Int, msg: String)
   extends RuntimeException(msg)
 
-final class Engine {
+final class Engine private[graft] (residentBudget: Resident.Budget) {
   import Catalog._
+
+  /** An engine whose resident snapshots share [[Resident.Budget.ofHeap]]. */
+  def this() = this(Resident.Budget.ofHeap())
 
   val catalog = new Catalog
   // @volatile: HttpShell serves from an 8-thread pool while attach/detach
@@ -316,51 +319,71 @@ final class Engine {
   // serves: addIndex, dropIndex, attaching or clearing a backend, and the
   // end of each withMaintenance commit. Each change bumps the key's epoch;
   // a snapshot built under an older epoch is never handed out again, so a
-  // build racing an unfenced change (addIndex) cannot outlive it.
+  // build racing an unfenced change (addIndex) cannot outlive it. Every
+  // snapshot is charged to residentBudget while its key holds it; a build
+  // that would pass the budget is declined, and the index stays on its
+  // Spark plan until its next change.
 
   /** One epoch's snapshot, built at most once (the lazy val's lock makes
-    * concurrent first requests wait for one build). */
-  private final class Holder(val epoch: Long, build: => Option[Resident.Snapshot]) {
-    lazy val snapshot: Option[Resident.Snapshot] = build
+    * concurrent first requests wait for one build) within the bytes the
+    * budget has left, and charged to it until dropped. */
+  private final class Holder(val epoch: Long, build: Long => Option[Resident.Snapshot]) {
+    private var charged = 0L
+    private var dropped = false
+    lazy val snapshot: Option[Resident.Snapshot] =
+      build(residentBudget.available).filter(charge)
+    private def charge(s: Resident.Snapshot): Boolean = synchronized {
+      val ok = !dropped && residentBudget.reserve(s.bytes)
+      if (ok) charged = s.bytes
+      ok
+    }
+    def drop(): Unit = synchronized {
+      dropped = true
+      residentBudget.release(charged)
+      charged = 0L
+    }
   }
   private val holders = new java.util.concurrent.ConcurrentHashMap[IndexKey, Holder]()
   private val epochs = new java.util.concurrent.ConcurrentHashMap[IndexKey, java.lang.Long]()
 
   private def invalidate(key: IndexKey): Unit = {
     epochs.merge(key, 1L, (a: java.lang.Long, b: java.lang.Long) => a + b)
-    holders.remove(key)
-    ()
+    val h = holders.remove(key)
+    if (h != null) h.drop()
   }
 
-  /** The key's snapshot for the current epoch, built by `build` if absent;
-    * None when the index is served by its Spark plan. */
-  private def resident(key: IndexKey)(build: => Option[Resident.Snapshot])
+  /** The key's snapshot for the current epoch, built by `build` (given the
+    * bytes it may take) if absent; None when the index is served by its
+    * Spark plan. */
+  private def resident(key: IndexKey)(build: Long => Option[Resident.Snapshot])
       : Option[Resident.Snapshot] = {
     val epoch: Long = epochs.getOrDefault(key, 0L)
     holders.compute(key, (_, h) =>
-      if (h != null && h.epoch == epoch) h else new Holder(epoch, build)).snapshot
+      if (h != null && h.epoch == epoch) h
+      else { if (h != null) h.drop(); new Holder(epoch, build) }).snapshot
   }
 
   private def residentAnn(meta: IndexMetadata, options: IndexOptionsVs,
       backend: Option[Engine.AnnBackend]): Option[Resident.AnnSnapshot] =
-    resident(meta.key) {
+    resident(meta.key) { limit =>
       val base = frameOr404(meta.key)
-      def collect(df: DataFrame, bucketed: Boolean) =
-        Resident.Vectors.collect(df, meta, options.space, options.dims, bucketed)
+      def collect(df: DataFrame, bucketed: Boolean, limit: Long) =
+        Resident.Vectors.collect(df, meta, options.space, options.dims, bucketed, limit)
       backend match {
-        case None => collect(base, bucketed = false).map(Resident.AnnSnapshot(_, None))
+        case None => collect(base, bucketed = false, limit).map(Resident.AnnSnapshot(_, None))
         case Some(Engine.LshBackend(cfg)) if cfg.indexed eq base =>
-          collect(base, bucketed = true).map(v => Resident.AnnSnapshot(v, Some(cfg -> v)))
+          collect(base, bucketed = true, limit).map(v => Resident.AnnSnapshot(v, Some(cfg -> v)))
         case Some(Engine.LshBackend(cfg)) =>
-          for (b <- collect(base, bucketed = false); s <- collect(cfg.indexed, bucketed = true))
+          for (b <- collect(base, bucketed = false, limit);
+               s <- collect(cfg.indexed, bucketed = true, limit - b.bytes))
             yield Resident.AnnSnapshot(b, Some(cfg -> s))
         case Some(_) => None
       }
     }.collect { case a: Resident.AnnSnapshot => a }
 
   private def residentText(meta: IndexMetadata): Option[Resident.Text] =
-    resident(meta.key) {
-      Resident.Text.collect(frameOr404(meta.key), meta.primaryKeyColumns.head, meta.targetColumn)
+    resident(meta.key) { limit =>
+      Resident.Text.collect(frameOr404(meta.key), meta.primaryKeyColumns.head, meta.targetColumn, limit)
     }.collect { case t: Resident.Text => t }
 
   /** Routed, validated ANN search — the whole §3.1 lifecycle. A resident
@@ -593,16 +616,6 @@ object ResultFormat {
   def saturate(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     least(greatest(c, lit(-FloatMax)), lit(FloatMax))
 
-  /** [[saturate]] on one collected value, as Spark evaluates it: `greatest`
-    * skips a null (→ -FloatMax) and NaN orders above every double
-    * (→ FloatMax). */
-  def saturateValue(d: Any): Double = d match {
-    case null => -FloatMax
-    case n: java.lang.Number =>
-      val v = n.doubleValue
-      if (v.isNaN || v > FloatMax) FloatMax else if (v < -FloatMax) -FloatMax else v
-  }
-
   /** The rows of a result frame. A resident reply is a `LocalRelation`
     * ([[Resident]]): its rows are converted as they are, with no planning or
     * execution; any other frame is collected. */
@@ -615,9 +628,16 @@ object ResultFormat {
       case _ => results.collect()
     }
 
-  /** The rows of [[transpose]]'s array, on the driver: each result row's
-    * (`distance`, `pkCols…`, `similarity`), sorted ascending by Catalyst's
-    * struct ordering as `sort_array` sorts them — no aggregate job. */
+  // per result schema: saturate(distance) and saturate(similarity), bound
+  // once for Catalyst's interpreter (Resident.bound)
+  private val saturators =
+    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.types.StructType,
+      (org.apache.spark.sql.catalyst.expressions.Expression, org.apache.spark.sql.catalyst.expressions.Expression)]()
+
+  /** The elements of [[transpose]]'s arrays, on the driver: each result
+    * row's (`saturate(distance)`, `pkCols…`, `saturate(similarity)`),
+    * sorted ascending by Catalyst's struct ordering over the unsaturated
+    * values as `sort_array` sorts them — no aggregate job. */
   def transposedRows(results: DataFrame, pkCols: Seq[String]): Array[org.apache.spark.sql.Row] = {
     val names = "distance" +: pkCols :+ "similarity"
     val schema = org.apache.spark.sql.types.StructType(names.map(results.schema(_)))
@@ -625,10 +645,16 @@ object ResultFormat {
       .createToCatalystConverter(schema)
     val ord = org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
       .forSchema(schema.map(_.dataType))
+    val (satDistance, satSimilarity) = saturators.computeIfAbsent(schema, s =>
+      (Resident.bound(results.sparkSession, s, saturate(col("distance"))),
+        Resident.bound(results.sparkSession, s, saturate(col("similarity")))))
     collectRows(results)
       .map(r => org.apache.spark.sql.Row.fromSeq(names.map(n => r.get(r.fieldIndex(n)))))
       .map(r => (toCatalyst(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow], r))
-      .sortWith((a, b) => ord.lt(a._1, b._1)).map(_._2)
+      .sortWith((a, b) => ord.lt(a._1, b._1))
+      .map { case (c, r) =>
+        org.apache.spark.sql.Row.fromSeq(satDistance.eval(c) +: r.toSeq.tail.init :+ satSimilarity.eval(c))
+      }
   }
 
   /** One-row DataFrame with one array column per pk column plus `distances`

@@ -1,7 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -36,6 +36,22 @@ object GraftSqlBridge {
   def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** The rows of a frame and the bytes [[collectInternal]] would bring to
+    * the driver (each row's `UnsafeRow` size), summed on the executors: one
+    * job that returns two longs per partition. */
+  def collectedSize(df: DataFrame): (Long, Long) = {
+    val qe = classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[Row]].queryExecution.logical).queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collectedSize")) {
+      qe.executedPlan.execute().mapPartitions { it =>
+        var n = 0L
+        var bytes = 0L
+        it.foreach { r => n += 1; bytes += r.asInstanceOf[UnsafeRow].getSizeInBytes }
+        Iterator.single((n, bytes))
+      }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
+    }
+  }
 
   /** Collect a frame's rows in Catalyst's internal form (no conversion to
     * external `Row`s), as one tracked SQL execution like `collect()`. */

@@ -5,15 +5,17 @@ import graft.functions.VectorFunctions._
 import graft.operators._
 import graft.operators.Ann.AnnRequest
 import graft.operators.Catalog._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.functions._
 
 /** Resident snapshots (`Resident`, routed by `Engine`): replies equal the
   * Spark plans they replace byte for byte, warm requests start no Spark
-  * job, no read after a change is answered from an older snapshot, and
-  * concurrent first requests share one build. */
+  * job, no read after a change is answered from an older snapshot,
+  * concurrent first requests share one build, and snapshots are bounded in
+  * bytes, per index and across the engine. */
 class ResidentSpec extends SparkSpec {
   import spark.implicits._
 
@@ -46,21 +48,37 @@ class ResidentSpec extends SparkSpec {
     val agg = ResultFormat.transpose(spark, Seq(pk)).head()
     val rows = ResultFormat.transposedRows(served, Seq(pk))
     assert(rows.map(_.get(1)).toSeq == agg.getSeq[Any](agg.fieldIndex(s"pk_$pk")), what)
-    assert(rows.map(r => ResultFormat.saturateValue(r.get(0))).toSeq ==
+    assert(rows.map(_.getDouble(0)).toSeq ==
       agg.getSeq[Double](agg.fieldIndex("distances")), what)
-    assert(rows.map(r => ResultFormat.saturateValue(r.get(2))).toSeq ==
+    assert(rows.map(_.getDouble(2)).toSeq ==
       agg.getSeq[Double](agg.fieldIndex("similarity_scores")), what)
   }
 
-  /** Jobs started by this thread's requests under `tag`; the sentinel job
-    * at the end orders the listener bus, so every earlier job is counted. */
-  private def jobsUnder(tag: String)(body: => Unit): Int = {
+  /** Jobs started by this thread's requests under `tag`. */
+  private def jobsUnder(tag: String)(body: => Unit): Int = jobExecutions(tag)(body).size
+
+  /** The SQL execution name (`collect`, `collectInternal`, …) of each job
+    * this thread's requests under `tag` started; the sentinel job at the end
+    * orders the listener bus, so every earlier job and execution end is
+    * counted. */
+  private def jobExecutions(tag: String)(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val names = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("graft.spec.tag")))
-          .filter(_.startsWith(tag)).foreach(seen.add)
+        Option(e.properties).foreach { p =>
+          Option(p.getProperty("graft.spec.tag")).filter(_.startsWith(tag)).foreach { t =>
+            seen.add(t -> String.valueOf(p.getProperty("spark.sql.execution.id")))
+          }
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case end: SparkListenerSQLExecutionEnd =>
+          // `executionName` is private[sql] in Scala and public in bytecode
+          val name = end.getClass.getMethod("executionName").invoke(end).asInstanceOf[Option[String]]
+          names.put(end.executionId.toString, name.getOrElse("")); ()
+        case _ =>
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -68,10 +86,12 @@ class ResidentSpec extends SparkSpec {
       try body finally sc.setLocalProperty("graft.spec.tag", null)
       sc.setLocalProperty("graft.spec.tag", tag + ":sentinel")
       try spark.range(1).collect() finally sc.setLocalProperty("graft.spec.tag", null)
+      def sentinelSeen = seen.toArray.exists(_.asInstanceOf[(String, String)]._1 == tag + ":sentinel")
       val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains(tag + ":sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(tag + ":sentinel"), "listener never saw the sentinel job")
-      seen.size() - 1
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinelSeen, "listener never saw the sentinel job")
+      seen.toArray.toSeq.map(_.asInstanceOf[(String, String)]).filter(_._1 == tag)
+        .map { case (_, id) => names.getOrDefault(id, "") }
     } finally sc.removeSparkListener(listener)
   }
 
@@ -253,6 +273,79 @@ class ResidentSpec extends SparkSpec {
     }
     assert(replies.size == 8 && replies.toArray.distinct.length == 1)
     assert(jobs == buildJobs, s"8 concurrent first requests ran $jobs jobs; one build runs $buildJobs")
+  }
+
+  test("a BM25 snapshot is bounded by bytes, not documents: long documents and " +
+      "many distinct terms are served by the Spark plan") {
+    // 40 documents in each corpus. "repeated": 2,000 tokens of three words
+    // each, so the tokenized rows pass the per-snapshot limit while the
+    // postings would be tiny. "unique": 100 terms no other document has,
+    // so the rows fit and the postings pass the limit as they are built.
+    def corpus(text: Int => Seq[String]) =
+      (0 until 40).map(i => (i.toLong, ("spark" +: text(i)).mkString(" "))).toDF("doc_id", "text")
+        .repartition(2) // a local relation would be collected without a job
+    val corpora = Seq(
+      ("short", corpus(i => Seq("dup", "merge", s"u${i}x7")), true),
+      ("repeated", corpus(_ => Seq.tabulate(2000)(j => Seq("dup", "merge", "window")(j % 3))), false),
+      ("unique", corpus(i => Seq.tabulate(100)(j => s"u${i}x$j")), false))
+    val budget = new Resident.Budget(1L << 20, 256L << 10)
+    val e = new Engine(budget)
+    corpora.foreach { case (index, frame, _) => e.addIndex(ftsMeta.copy(index = index), frame) }
+    val t = types(corpora.head._2)
+    // the tokenized rows are counted on the executors first: "repeated"
+    // brings none of them to the driver, "unique" collects and then stops
+    // building its postings
+    for ((index, _, _) <- corpora) {
+      val collected = jobExecutions(s"bm25-$index")(e.bm25("ks", index, "spark", 10).collect())
+        .contains("collectInternal")
+      assert(collected == (index != "repeated"), s"$index: rows collected = $collected")
+    }
+    for ((index, frame, resident) <- corpora; q <- Seq("spark", "dup u3x7 merge")) {
+      val served = e.bm25("ks", index, q, 10)
+      assert(isLocal(served) == resident, s"$index: resident should be $resident")
+      assert(Wire.bm25ResponseJson(served, "doc_id", t) ==
+        Wire.bm25ResponseJson(Bm25.search(frame, "doc_id", "text", q, 10), "doc_id", t), s"$index $q")
+    }
+    assert(budget.used > 0 && budget.used <= budget.perSnapshot)
+  }
+
+  test("snapshots share one engine-wide byte budget: indexes past it are served " +
+      "by the Spark plan, and a dropped snapshot's bytes go back") {
+    val q = Seq.fill(16)(0.5f)
+    val req = AnnRequest(q, 5)
+    val frame = clustered.repartition(2) // a local relation would be collected without a job
+    val unbounded = new Resident.Budget(Long.MaxValue / 2, Long.MaxValue / 2)
+    val probe = new Engine(unbounded)
+    probe.addIndex(vsMeta("i0", Euclidean, 16), frame)
+    assert(isLocal(probe.ann("ks", "i0", req)))
+    val one = unbounded.used
+    assert(one > 0)
+
+    // room for two and a half snapshots of this size
+    val budget = new Resident.Budget(one * 5 / 2, one * 5 / 2)
+    val e = new Engine(budget)
+    (1 to 4).foreach(n => e.addIndex(vsMeta(s"i$n", Euclidean, 16), frame))
+    val expected = Ann.plan(frame, "embedding", Seq("vec_id"), Euclidean, req)
+    def check(n: Int, resident: Boolean): Unit = {
+      val served = e.ann("ks", s"i$n", req)
+      assert(isLocal(served) == resident, s"i$n: resident should be $resident")
+      assert(Wire.annResponseJson(served, Seq("vec_id"), types(expected)) ==
+        Wire.annResponseJson(expected, Seq("vec_id"), types(expected)), s"i$n")
+    }
+    assert(jobExecutions("budget-i1")(check(1, resident = true)).contains("collectInternal"))
+    check(2, resident = true)
+    // past the budget: declined by the executors' byte count, no row collected
+    assert(!jobExecutions("budget-i3")(check(3, resident = false)).contains("collectInternal"))
+    check(4, resident = false)
+    assert(budget.used == 2 * one)
+    // a declined index stays on its Spark plan until its next change
+    check(3, resident = false)
+    assert(e.dropIndex("ks", "i1"))
+    assert(budget.used == one)
+    e.withMaintenance("ks", "i3") { () }
+    check(3, resident = true)
+    assert(budget.used == 2 * one)
+    check(4, resident = false)
   }
 }
 
