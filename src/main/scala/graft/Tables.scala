@@ -30,7 +30,4 @@ object Tables {
       case _ => df
     }
   }
-
-  def loadAll(spark: SparkSession, dir: String): Map[String, DataFrame] =
-    names.map(n => n -> load(spark, dir, n)).toMap
 }

@@ -36,6 +36,12 @@ object HttpShell {
   if (System.getProperty("sun.net.httpserver.nodelay") == null)
     System.setProperty("sun.net.httpserver.nodelay", "true")
 
+  /** The largest request body the shell reads: 2 MiB, the default body
+    * limit of axum, the reference's HTTP layer. A longer body is answered
+    * 413 after reading one byte past the limit, so no request buffers more
+    * than that on the serving driver. */
+  val MaxBodyBytes: Int = 2 * 1024 * 1024
+
   final case class Server(underlying: HttpServer,
       pool: java.util.concurrent.ExecutorService) {
     def port: Int = underlying.getAddress.getPort
@@ -53,8 +59,12 @@ object HttpShell {
       override def handle(ex: HttpExchange): Unit = {
         val response =
           try {
-            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            Routes.handle(engine, ex.getRequestMethod, ex.getRequestURI.getPath, body)
+            val body = ex.getRequestBody.readNBytes(MaxBodyBytes + 1)
+            if (body.length > MaxBodyBytes)
+              Routes.error(413, s"request body exceeds $MaxBodyBytes bytes")
+            else
+              Routes.handle(engine, ex.getRequestMethod, ex.getRequestURI.getPath,
+                new String(body, StandardCharsets.UTF_8))
           } catch {
             // Routes maps QueryException already; anything else is a 500
             case e: Exception =>

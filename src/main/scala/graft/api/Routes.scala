@@ -107,9 +107,9 @@ object Routes {
         opts.put("search_beam_width", o.expansionSearch)
         opts.put("similarity_function", spaceName(o.space))
         opts.put("quantization", quantName(o.quantization))
-        // the ATTACHED serving backend ("exact" when none) — the HTTP
-        // surface reflects serving reality, like the reference's per-index
-        // engine options (lib.rs:766-775 swaps USearch/DiskANN/OpenSearch)
+        // how the index is served ("lsh" when LSH serving is attached,
+        // "exact" otherwise) — the HTTP surface reflects serving reality,
+        // like the reference's per-index engine options (lib.rs:766-775)
         opts.put("backend", engine.servingBackendName(e.meta.keyspace, e.meta.index))
       case Catalog.Fts(_) =>
         opts.put("type", "fulltext")
@@ -127,7 +127,7 @@ object Routes {
     mapper.writeValueAsString(n)
   }
 
-  private def error(status: Int, message: String): Response =
+  private[api] def error(status: Int, message: String): Response =
     Response(status, Wire.errorJson(new QueryException(status, message)))
 
   /** The ANN/BM25 503 body: IndexNotReadyReason (lib.rs:216-231). A running

@@ -69,19 +69,6 @@ object ApproxAnn {
   def buildLshIndex(df: DataFrame, vecCol: String, nbits: Int, dims: Int): DataFrame =
     df.withColumn("_bucket", lshBucket(col(vecCol), hyperplanes(nbits, dims)))
 
-  /** [[buildLshIndex]] with the plane count auto-tuned from the corpus
-    * size ([[autoNbits]]) — the store-BUILD default. Returns the chosen
-    * nbits alongside the frame: the plane count a store was built at is
-    * index metadata that every later probe/serving config must reuse
-    * (deriving it again at query time from a grown corpus would hash with
-    * different planes than the stored `_bucket`s). */
-  def buildLshIndexAuto(
-      df: DataFrame, vecCol: String, dims: Int,
-      targetOccupancy: Int = 8): (DataFrame, Int) = {
-    val nb = autoNbitsFor(df, vecCol, targetOccupancy)
-    (buildLshIndex(df, vecCol, nb, dims), nb)
-  }
-
   /** Johnson–Lindenstrauss random projection: compact `dims`-dim vectors to
     * `outDims` dense doubles using the SAME deterministic md5 hyperplanes as
     * [[lshBucket]] (LSH keeps only the projection SIGNS; this keeps the
@@ -625,17 +612,6 @@ object ApproxAnn {
     }
   }
 
-  /** Back-compat alias for [[knnJoinLsh]] (the auto form became the
-    * default entry point in round 10). */
-  def knnJoinLshAuto(
-      df: DataFrame, vecCol: String, idCol: String, space: Space, k: Int,
-      tuning: LshTuning = LshTuning(),
-      queryFilter: Column = lit(true),
-      carry: Seq[String] = Nil,
-      pairFilter: Column = lit(true)): DataFrame =
-    knnJoinLsh(df, vecCol, idCol, space, k, tuning,
-      queryFilter, carry, pairFilter)
-
   /** [[knnJoinLsh]] at an explicitly pinned plane count — the
     * deterministic-replay variant (oracle SQL inlines the hyperplanes for
     * one nbits). `nbits` has deliberately NO default: a fixed plane count
@@ -1091,19 +1067,6 @@ object ApproxAnn {
       .withColumn("_pq", array(codes: _*))
   }
 
-  /** Materialize the PQ store: the narrow (pkCols…, extraCols…, _pq)
-    * projection with codes computed once at build time — the PQ analogue of
-    * [[materializeQuantizedIndex]]. */
-  def materializePqIndex(
-      df: DataFrame, vecCol: String, pkCols: Seq[String],
-      codebooks: PqCodebooks, path: String,
-      extraCols: Seq[String] = Nil): DataFrame = {
-    pqEncode(df, vecCol, codebooks)
-      .select((pkCols ++ extraCols).map(col) :+ col("_pq"): _*)
-      .write.mode("overwrite").parquet(path)
-    graft.sources.IndexStorage.read(df.sparkSession, path)
-  }
-
   /** Per-query ADC lookup table, flattened to index j·k + code: entry =
     * the space's additive per-subspace term between the query's j-th slice
     * and codeword (j, code). Euclidean decomposes as Σⱼ l2², dot-product as
@@ -1198,31 +1161,6 @@ object ApproxAnn {
     searchPq(codes.filter(col("_centroid").isin(probeIds: _*)),
       base, vecCol, pkCols, space, req, codebooks, oversample)
   }
-
-  /** Adaptive filtered IVFADC: the same coverage certification as
-    * [[searchIvfAdaptive]], run over the narrow code store (the decision
-    * scan reads `_centroid` + filter columns — codes and vectors stay on
-    * disk). A selective predicate whose matching rows are NOT concentrated
-    * in the probed cells would silently lose recall under a fixed nprobe;
-    * here the first nprobe holding `limit·oversample` matching rows AND
-    * `minCoverage` of all matching rows wins, else the plan falls back to
-    * the exact scan over `base` (recall 1.0, cheap precisely when it
-    * triggers). Note [[searchPq]] itself needs no such compensation — its
-    * stage 1 scans every row, so a selective filter only SHRINKS the ADC
-    * shortlist toward the exact answer (pinned in ApproxAnnSpec). */
-  def searchIvfPqAdaptive(
-      codes: DataFrame, base: DataFrame, vecCol: String, pkCols: Seq[String],
-      space: Space, req: AnnRequest,
-      centroids: Seq[(Int, Seq[Float])], codebooks: PqCodebooks,
-      nprobes: Seq[Int] = Seq(1, 2, 4, 8), oversample: Double = 4.0,
-      minCoverage: Double = 0.9): DataFrame =
-    chooseIvfProbes(codes, "_pq", req, centroids, nprobes,
-      oversample, minCoverage) match {
-      case Some(np) =>
-        searchIvfPq(codes, base, vecCol, pkCols, space, req, centroids,
-          codebooks, np, oversample)
-      case None => Ann.plan(base, vecCol, pkCols, space, req)
-    }
 
   /** Two-stage rescoring over a prebuilt quantized store: stage 1 scans ONLY
     * the narrow (pk, _q) columns (check ReadSchema in the plan — no float

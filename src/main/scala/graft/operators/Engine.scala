@@ -195,31 +195,29 @@ final class Engine private[graft] (residentBudget: Resident.Budget) {
   def setSegmentCount(keyspace: String, index: String, n: Int): Unit =
     segmentCounts = segmentCounts.updated(IndexKey(keyspace, index), n)
 
-  @volatile private var servingBackends: Map[IndexKey, Engine.AnnBackend] = Map.empty
+  @volatile private var servingBackends: Map[IndexKey, Engine.ApproxServing] = Map.empty
 
-  /** Attach a pluggable serving backend to a vector index — the analogue
-    * of the reference's per-index engine selection (lib.rs:766-775 swaps
-    * USearch / DiskANN / OpenSearch behind one seam). The Engine owns
-    * routing, the 404/503/400 taxonomy, counters and latency metrics;
-    * the backend owns only the physical plan for an already-validated
-    * request, so every backend inherits identical semantics. Attach-time
-    * misconfiguration fails HERE with the 400 taxonomy, not as a raw
-    * AnalysisException inside the first query's decision scan. */
-  def setServingBackend(keyspace: String, index: String,
-      backend: Engine.AnnBackend): Unit = {
+  /** Serve a vector index by adaptive LSH over a bucketed store
+    * ([[ApproxAnn.searchLshAdaptive]]: partition-pruned probe at a
+    * coverage-certified radius, exact-scan fallback otherwise) — the
+    * serving default the reference gets from usearch being an approximate
+    * index. The Engine keeps routing, the 404/503/400 taxonomy, counters
+    * and latency metrics. A store that lacks a column the index serves
+    * fails HERE with a 400, not as a raw AnalysisException inside the
+    * first query's decision scan. */
+  def setApproxServing(keyspace: String, index: String, cfg: Engine.ApproxServing): Unit = {
     val key = IndexKey(keyspace, index)
     val meta = catalog.get(key).map(_.meta).getOrElse(
       throw new QueryException(404, s"index $keyspace/$index not found"))
-    backend.validate(meta)
-    servingBackends = servingBackends.updated(key, backend)
+    val cols = cfg.indexed.columns.toSet
+    val missing = ("_bucket" +: meta.targetColumn +:
+      (meta.primaryKeyColumns ++ meta.allFilteringColumns)).distinct.filterNot(cols.contains)
+    if (missing.nonEmpty)
+      throw new QueryException(400,
+        s"approx store for $keyspace/$index lacks column(s): ${missing.mkString(", ")}")
+    servingBackends = servingBackends.updated(key, cfg)
     invalidate(key)
   }
-
-  /** Convenience for the adaptive-LSH backend (the serving default the
-    * reference gets from usearch being an approximate index) — kept as
-    * the stable name for the most common attach. */
-  def setApproxServing(keyspace: String, index: String, cfg: Engine.ApproxServing): Unit =
-    setServingBackend(keyspace, index, Engine.LshBackend(cfg))
 
   def clearServingBackend(keyspace: String, index: String): Unit = {
     val key = IndexKey(keyspace, index)
@@ -227,9 +225,9 @@ final class Engine private[graft] (residentBudget: Resident.Budget) {
     invalidate(key)
   }
 
-  /** The attached backend's name ("exact" when none) — diagnostics. */
+  /** "lsh" when LSH serving is attached, "exact" otherwise — diagnostics. */
   def servingBackendName(keyspace: String, index: String): String =
-    servingBackends.get(IndexKey(keyspace, index)).map(_.name).getOrElse("exact")
+    if (servingBackends.contains(IndexKey(keyspace, index))) "lsh" else "exact"
 
   // ---- store fence (commit visibility) -------------------------------------
   // The maintenance writers append segment directories and the compactors
@@ -364,20 +362,19 @@ final class Engine private[graft] (residentBudget: Resident.Budget) {
   }
 
   private def residentAnn(meta: IndexMetadata, options: IndexOptionsVs,
-      backend: Option[Engine.AnnBackend]): Option[Resident.AnnSnapshot] =
+      approx: Option[Engine.ApproxServing]): Option[Resident.AnnSnapshot] =
     resident(meta.key) { limit =>
       val base = frameOr404(meta.key)
       def collect(df: DataFrame, bucketed: Boolean, limit: Long) =
         Resident.Vectors.collect(df, meta, options.space, options.dims, bucketed, limit)
-      backend match {
+      approx match {
         case None => collect(base, bucketed = false, limit).map(Resident.AnnSnapshot(_, None))
-        case Some(Engine.LshBackend(cfg)) if cfg.indexed eq base =>
+        case Some(cfg) if cfg.indexed eq base =>
           collect(base, bucketed = true, limit).map(v => Resident.AnnSnapshot(v, Some(cfg -> v)))
-        case Some(Engine.LshBackend(cfg)) =>
+        case Some(cfg) =>
           for (b <- collect(base, bucketed = false, limit);
                s <- collect(cfg.indexed, bucketed = true, limit - b.bytes))
             yield Resident.AnnSnapshot(b, Some(cfg -> s))
-        case Some(_) => None
       }
     }.collect { case a: Resident.AnnSnapshot => a }
 
@@ -388,7 +385,7 @@ final class Engine private[graft] (residentBudget: Resident.Budget) {
 
   /** Routed, validated ANN search — the whole §3.1 lifecycle. A resident
     * index ([[Resident]]) is ranked in memory and comes back as a local
-    * frame; a larger one, or a backend other than LSH, as its Spark plan. */
+    * frame; a larger one as its Spark plan. */
   def ann(keyspace: String, index: String, req: AnnRequest): DataFrame = {
     val (eqCols, rangeCols) = RestrictionCompiler.splitColumns(req.restrictions)
     catalog.bestIndex(IndexKey(keyspace, index), eqCols, rangeCols) match {
@@ -409,13 +406,16 @@ final class Engine private[graft] (residentBudget: Resident.Budget) {
         recordQuery(meta.key)
         incrementCounter("ann-queries")
         try {
-          val backend = servingBackends.get(meta.key)
+          val approx = servingBackends.get(meta.key)
           val options = Ann.validate(meta, req)
-          if (backend.isDefined) incrementCounter("ann-approx-queries")
-          residentAnn(meta, options, backend).flatMap(_.search(req)).getOrElse {
+          if (approx.isDefined) incrementCounter("ann-approx-queries")
+          residentAnn(meta, options, approx).flatMap(_.search(req)).getOrElse {
             val base = frameOr404(meta.key)
-            backend match {
-              case Some(b) => b.search(base, meta, options.space, req)
+            approx match {
+              case Some(cfg) =>
+                ApproxAnn.searchLshAdaptive(cfg.indexed, base, meta.targetColumn,
+                  meta.primaryKeyColumns, options.space, req, cfg.nbits,
+                  cfg.radii, cfg.oversample, cfg.minCoverage)
               case None =>
                 Ann.plan(base, meta.targetColumn, meta.primaryKeyColumns, options.space, req)
             }
@@ -560,49 +560,6 @@ object Engine {
       indexed: DataFrame, nbits: Int,
       radii: Seq[Int] = ApproxAnn.DefaultAdaptiveRadii,
       oversample: Double = 2.0, minCoverage: Double = 0.9)
-
-  /** Pluggable ANN serving backend — the reference swaps USearch / DiskANN
-    * / OpenSearch per index behind one seam (lib.rs:766-775); this is that
-    * seam for Spark plans. A backend answers an ALREADY-VALIDATED request
-    * (the Engine owns routing, the 404/503/400 taxonomy, counters and
-    * latency metrics) against the registered base frame, which doubles as
-    * every adaptive backend's exact-fallback path. */
-  trait AnnBackend {
-    /** Short id, surfaced via [[Engine.servingBackendName]]. */
-    def name: String
-
-    /** Attach-time compatibility check — throw `QueryException(400)` so
-      * misconfiguration fails at attach, not inside the first query. */
-    def validate(meta: Catalog.IndexMetadata): Unit = ()
-
-    /** Physical plan for a validated request. `base` = the registered
-      * exact frame. */
-    def search(base: DataFrame, meta: Catalog.IndexMetadata,
-        space: graft.functions.VectorFunctions.Space,
-        req: Ann.AnnRequest): DataFrame
-  }
-
-  /** Adaptive LSH over a bucket-partitioned store
-    * ([[ApproxAnn.searchLshAdaptive]]: partition-pruned probe at a
-    * coverage-certified radius, exact-scan fallback otherwise). */
-  final case class LshBackend(cfg: ApproxServing) extends AnnBackend {
-    val name = "lsh"
-    override def validate(meta: Catalog.IndexMetadata): Unit = {
-      val cols = cfg.indexed.columns.toSet
-      val needed = ("_bucket" +: meta.targetColumn +:
-        (meta.primaryKeyColumns ++ meta.allFilteringColumns)).distinct
-      val missing = needed.filterNot(cols.contains)
-      if (missing.nonEmpty)
-        throw new QueryException(400,
-          s"approx store for ${meta.keyspace}/${meta.index} lacks column(s): ${missing.mkString(", ")}")
-    }
-    def search(base: DataFrame, meta: Catalog.IndexMetadata,
-        space: graft.functions.VectorFunctions.Space,
-        req: Ann.AnnRequest): DataFrame =
-      ApproxAnn.searchLshAdaptive(cfg.indexed, base, meta.targetColumn,
-        meta.primaryKeyColumns, space, req, cfg.nbits,
-        cfg.radii, cfg.oversample, cfg.minCoverage)
-  }
 }
 
 /** Columnar response shaping (SURVEY §2 S8): pivot result rows into

@@ -149,8 +149,8 @@ object Resident {
   }
 
   /** A vector index's snapshot: the registered frame's rows, and for an
-    * index served by [[Engine.LshBackend]] the LSH store's rows too (the
-    * same [[Vectors]] when the store is the registered frame). */
+    * index served by LSH ([[Engine.setApproxServing]]) the LSH store's rows
+    * too (the same [[Vectors]] when the store is the registered frame). */
   final case class AnnSnapshot(base: Vectors, lsh: Option[(Engine.ApproxServing, Vectors)])
       extends Snapshot {
 

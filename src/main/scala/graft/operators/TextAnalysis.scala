@@ -871,10 +871,8 @@ object TextAnalysis {
 
   /** The (id, 0-based ordinal, trimmed-line hash) relation [[lineDedup]]
     * aggregates over — an ingest-time store artifact like the span-window
-    * relation (maintained incrementally from CDC by
-    * [[graft.streaming.IndexMaintenance.appendLineSegment]]); posexplode
-    * keeps empty lines so ordinals align with the split array in the
-    * rewrite. */
+    * relation; posexplode keeps empty lines so ordinals align with the
+    * split array in the rewrite. */
   def lineRelation(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), posexplode(split(col(textCol), "\n")))
       .toDF(idCol, "_i", "_l")

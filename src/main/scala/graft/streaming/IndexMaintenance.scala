@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   *    across the live segments;
   *  - the compactor (`compact*Segments`, on a [[CompactionPolicy]] cadence
   *    via [[withCompaction]]) folds history into one segment.
-  * Store kinds: FTS postings, MinHash dedup, LSH vector, IVF, IVFADC, flat
-  * PQ, span windows, line relation and the LWW row snapshot.
+  * Store kinds: FTS postings, MinHash dedup, LSH vector and the LWW row
+  * snapshot — the reference maintains a vector index and a tantivy FTS
+  * index; dedup and the row snapshot ride the same CDC loop.
   *
   * Events are assumed LWW-compacted per doc id (compose with
   * [[graft.operators.Lww.compactState]] upstream for out-of-order streams).
@@ -153,8 +154,8 @@ object IndexMaintenance {
   }
 
   /** Rewrite `df` as the single ceiling segment (dynamic partition
-    * overwrite; `cellCols` adds the nested cell partitioning of the
-    * vector/IVF layouts). An EMPTY fold still writes one schema-bearing
+    * overwrite; `cellCols` adds the nested `_bucket` partitioning of the
+    * LSH vector layout). An EMPTY fold still writes one schema-bearing
     * zero-row file under the ceiling directory — a dynamic overwrite of
     * zero rows writes nothing at all, and once [[dropSegmentsBelow]] runs
     * the store would have no files left to infer a schema from (a fully
@@ -263,7 +264,7 @@ object IndexMaintenance {
     * threshold, run the kind's `compact` function. foreachBatch serializes
     * batches, so the fold always runs against a QUIESCED store (between
     * micro-batches) — the commit-visibility contract the compactors
-    * document. One combinator serves all nine segment kinds: pass the
+    * document. One combinator serves every segment kind: pass the
     * kind's claims path (segment counting is layout-independent) and its
     * compact* closure. The `fts_segment_count` gauge (wire it via
     * `onCount`) shows the resulting sawtooth: rises to maxSegments+1,
@@ -404,252 +405,38 @@ object IndexMaintenance {
         segOffset + batchId, Seq("_bucket"))
   }
 
-  /** Reconciled live view over a one-row-per-id CELL store (LSH `_bucket` /
-    * IVF `_centroid` layouts): latest (id, seg) claim wins, tombstones
-    * (null `liveCol`) drop the id, cell-probe filters push below the
-    * reconcile join to the row scan (partition pruning intact) while the
-    * winner relation reads only the narrow (id, `_seg`) columns. */
-  private def readCellSegments(
-      spark: SparkSession, path: String, idCol: String,
-      liveCol: String, cellCol: String): DataFrame = {
-    val all = spark.read.parquet(path)
+  /** Reconciled live view over the vector segment store — the
+    * [[graft.operators.ApproxAnn.searchLsh]] input shape (id, vector,
+    * `_bucket` long): the latest (id, seg) claim wins and a tombstone
+    * (null vector) drops the id. A probed stale row (its id re-bucketed or
+    * tombstoned by a later segment) loses the (id, seg) join. Bucket-probe
+    * filters push below the reconcile join to the row scan (partition
+    * pruning intact) while the winner relation reads only the narrow
+    * (id, `_seg`) columns. */
+  def readVsSegmentIndex(
+      spark: SparkSession, indexPath: String, idCol: String,
+      vecCol: String = "embedding"): DataFrame = {
+    val all = spark.read.parquet(indexPath)
       .withColumn(SegCol, col(SegCol).cast("long"))
-      .withColumn(cellCol, col(cellCol).cast("long"))
+      .withColumn("_bucket", col("_bucket").cast("long"))
     val win = all.select(col(idCol), col(SegCol))
       .groupBy(col(idCol)).agg(max(col(SegCol)).as(SegCol))
     all.join(win, Seq(idCol, SegCol))
-      .filter(col(liveCol).isNotNull)
+      .filter(col(vecCol).isNotNull)
       .drop(SegCol)
   }
-
-  /** Fold a cell store's segments into one (tombstoned ids vanish). */
-  private def compactCellSegments(
-      spark: SparkSession, path: String, idCol: String,
-      liveCol: String, cellCol: String): Unit = {
-    val ceiling = spark.read.parquet(path)
-      .agg(max(col(SegCol).cast("long"))).head.getLong(0)
-    overwriteCeiling(path,
-      readCellSegments(spark, path, idCol, liveCol, cellCol),
-      ceiling, Seq(cellCol))
-    dropSegmentsBelow(spark, path, ceiling)
-  }
-
-  /** Reconciled live view over the vector segment store — the
-    * [[graft.operators.ApproxAnn.searchLsh]] input shape (id, vector,
-    * `_bucket` long). A probed stale row (its id re-bucketed or tombstoned by a later
-    * segment) loses the (id, seg) join; tombstone rows carry no vector. */
-  def readVsSegmentIndex(
-      spark: SparkSession, indexPath: String, idCol: String,
-      vecCol: String = "embedding"): DataFrame =
-    readCellSegments(spark, indexPath, idCol, vecCol, "_bucket")
 
   /** Fold the vector segment store into one segment (see
     * [[compactFtsSegments]]); tombstoned ids vanish entirely. */
   def compactVsSegments(
       spark: SparkSession, indexPath: String, idCol: String,
-      vecCol: String = "embedding"): Unit =
-    compactCellSegments(spark, indexPath, idCol, vecCol, "_bucket")
-
-  /** Segment-append writer for a materialized IVF index
-    * ([[graft.operators.ApproxAnn.buildIvfIndex]]'s cells) — same shape as
-    * [[appendVsSegment]] with the FIXED centroid set as the cell function
-    * (retraining centroids is an index REBUILD, as the reference rebuilds
-    * on an index-options change); tombstones claim cell −1 with a null
-    * vector. */
-  def appendIvfSegment(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      opCol: Option[String],
-      centroids: Seq[(Int, Seq[Float])],
-      segOffset: Long = 0L): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, batchId: Long) =>
-      import graft.operators.ApproxAnn
-      val isDelete = dedupIsDelete(vecCol, opCol)
-      val fresh = ApproxAnn.assignToCentroids(
-          batch.filter(!isDelete).select(col(idCol), col(vecCol)),
-          vecCol, centroids)
-        .select(col(idCol), col(vecCol), col("_centroid").cast("long").as("_centroid"))
-      val tombstones = batch.filter(isDelete)
-        .select(col(idCol), lit(null).cast(fresh.schema(vecCol).dataType).as(vecCol),
-          lit(-1L).as("_centroid"))
-      commitSeg(indexPath, fresh.unionByName(tombstones), idCol,
-        segOffset + batchId, Seq("_centroid"))
-  }
-
-  /** Reconciled IVF live view (the [[graft.operators.ApproxAnn.searchIvf]]
-    * input shape: id, vector, `_centroid` int). */
-  def readIvfSegmentIndex(
-      spark: SparkSession, indexPath: String, idCol: String,
-      vecCol: String = "embedding"): DataFrame =
-    readCellSegments(spark, indexPath, idCol, vecCol, "_centroid")
-      .withColumn("_centroid", col("_centroid").cast("int"))
-
-  def compactIvfSegments(
-      spark: SparkSession, indexPath: String, idCol: String,
-      vecCol: String = "embedding"): Unit =
-    compactCellSegments(spark, indexPath, idCol, vecCol, "_centroid")
-
-  /** Segment-append writer for the IVFADC code store: assign +
-    * PQ-encode per upsert, rows (id, `_pq`, `_centroid`) append under
-    * `_seg/_centroid`; tombstones claim cell −1 with a null code. */
-  def appendIvfPqSegment(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      opCol: Option[String],
-      centroids: Seq[(Int, Seq[Float])],
-      codebooks: graft.operators.ApproxAnn.PqCodebooks,
-      segOffset: Long = 0L): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, batchId: Long) =>
-      import graft.operators.ApproxAnn
-      val isDelete = dedupIsDelete(vecCol, opCol)
-      val fresh = ApproxAnn.pqEncode(
-          ApproxAnn.assignToCentroids(
-            batch.filter(!isDelete).select(col(idCol), col(vecCol)),
-            vecCol, centroids),
-          vecCol, codebooks)
-        .select(col(idCol), col("_pq"), col("_centroid").cast("long").as("_centroid"))
-      val tombstones = batch.filter(isDelete)
-        .select(col(idCol), lit(null).cast(fresh.schema("_pq").dataType).as("_pq"),
-          lit(-1L).as("_centroid"))
-      commitSeg(indexPath, fresh.unionByName(tombstones), idCol,
-        segOffset + batchId, Seq("_centroid"))
-  }
-
-  /** Reconciled IVFADC live view (the
-    * [[graft.operators.ApproxAnn.searchIvfPq]] `codes` shape). */
-  def readIvfPqSegmentIndex(
-      spark: SparkSession, indexPath: String, idCol: String): DataFrame =
-    readCellSegments(spark, indexPath, idCol, "_pq", "_centroid")
-      .withColumn("_centroid", col("_centroid").cast("int"))
-
-  def compactIvfPqSegments(
-      spark: SparkSession, indexPath: String, idCol: String): Unit =
-    compactCellSegments(spark, indexPath, idCol, "_pq", "_centroid")
-
-  /** Segment-append writer for the flat PQ code store
-    * ([[graft.operators.ApproxAnn.materializePqIndex]]'s codes; the
-    * codebooks are fixed index metadata): one
-    * (id, `_pq`) row per id per touching segment, null-code tombstones;
-    * the row IS its claim, so no cell column and no separate claims
-    * store. */
-  def appendPqSegment(
-      spark: SparkSession,
-      codesPath: String,
-      idCol: String,
-      vecCol: String,
-      opCol: Option[String],
-      codebooks: graft.operators.ApproxAnn.PqCodebooks,
-      segOffset: Long = 0L): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, batchId: Long) =>
-      import graft.operators.ApproxAnn
-      val isDelete = dedupIsDelete(vecCol, opCol)
-      val fresh = ApproxAnn.pqEncode(
-          batch.filter(!isDelete).select(col(idCol), col(vecCol)),
-          vecCol, codebooks)
-        .select(col(idCol), col("_pq"))
-      val tombstones = batch.filter(isDelete)
-        .select(col(idCol), lit(null).cast(fresh.schema("_pq").dataType).as("_pq"))
-      commitSeg(codesPath, fresh.unionByName(tombstones), idCol,
-        segOffset + batchId)
-  }
-
-  /** Reconciled flat PQ code view: (id, `_pq`), latest claim wins. */
-  def readPqSegmentCodes(
-      spark: SparkSession, codesPath: String, idCol: String): DataFrame = {
-    val live = winners(spark.read.parquet(codesPath), idCol)
-      .filter(col("_pq").isNotNull)
-    live.select(col(idCol), col("_pq"))
-  }
-
-  def compactPqSegments(
-      spark: SparkSession, codesPath: String, idCol: String): Unit = {
-    val ceiling = spark.read.parquet(codesPath)
+      vecCol: String = "embedding"): Unit = {
+    val ceiling = spark.read.parquet(indexPath)
       .agg(max(col(SegCol).cast("long"))).head.getLong(0)
-    overwriteCeiling(codesPath, readPqSegmentCodes(spark, codesPath, idCol),
-      ceiling, Nil)
-    dropSegmentsBelow(spark, codesPath, ceiling)
+    overwriteCeiling(indexPath,
+      readVsSegmentIndex(spark, indexPath, idCol, vecCol), ceiling, Seq("_bucket"))
+    dropSegmentsBelow(spark, indexPath, ceiling)
   }
-
-  /** Segment append for stores of rows derived per document (span windows,
-    * line relation): the derived rows are the values and a
-    * one-row-per-id `_live` flag frame is the claims — the FTS pattern
-    * with a boolean claim instead of a doc length. */
-  private def appendDerivedSegment(
-      valuesPath: String, claimsPath: String, idCol: String,
-      batch: DataFrame, isDelete: org.apache.spark.sql.Column,
-      derive: DataFrame => DataFrame, seg: Long): Unit = {
-    commitSeg(valuesPath, derive(batch.filter(!isDelete)), idCol, seg)
-    commitSeg(claimsPath, batch.select(col(idCol), (!isDelete).as("_live")),
-      idCol, seg)
-  }
-
-  private def readDerivedSegments(
-      spark: SparkSession, valuesPath: String, claimsPath: String,
-      idCol: String): DataFrame = {
-    val live = winners(spark.read.parquet(claimsPath), idCol)
-      .filter(col("_live"))
-    liveValues(valuesPath, live, idCol, spark)
-  }
-
-  private def compactDerivedSegments(
-      spark: SparkSession, valuesPath: String, claimsPath: String,
-      idCol: String): Unit = {
-    val values = readDerivedSegments(spark, valuesPath, claimsPath, idCol)
-    val claims = winners(spark.read.parquet(claimsPath), idCol)
-      .filter(col("_live")).drop(SegCol)
-    compactPair(spark, valuesPath, claimsPath, values, claims)
-  }
-
-  def appendSpanSegment(
-      spark: SparkSession, spanPath: String, claimsPath: String,
-      idCol: String, textCol: String, opCol: Option[String],
-      windowLen: Int = 10, segOffset: Long = 0L): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, batchId: Long) =>
-      appendDerivedSegment(spanPath, claimsPath, idCol, batch,
-        dedupIsDelete(textCol, opCol),
-        b => graft.operators.TextAnalysis.spanWindows(b, idCol, textCol, windowLen),
-        segOffset + batchId)
-  }
-
-  /** Reconciled span-window view ((id, `_h`), the
-    * [[graft.operators.TextAnalysis.duplicatedSpanFractionFromWindows]]
-    * input). */
-  def readSpanSegmentIndex(
-      spark: SparkSession, spanPath: String, claimsPath: String,
-      idCol: String): DataFrame =
-    readDerivedSegments(spark, spanPath, claimsPath, idCol)
-
-  def compactSpanSegments(
-      spark: SparkSession, spanPath: String, claimsPath: String,
-      idCol: String): Unit =
-    compactDerivedSegments(spark, spanPath, claimsPath, idCol)
-
-  def appendLineSegment(
-      spark: SparkSession, linePath: String, claimsPath: String,
-      idCol: String, textCol: String, opCol: Option[String],
-      segOffset: Long = 0L): (DataFrame, Long) => Unit = {
-    (batch: DataFrame, batchId: Long) =>
-      appendDerivedSegment(linePath, claimsPath, idCol, batch,
-        dedupIsDelete(textCol, opCol),
-        b => graft.operators.TextAnalysis.lineRelation(b, idCol, textCol),
-        segOffset + batchId)
-  }
-
-  /** Reconciled (id, ordinal, trimmed-line-hash) line relation (the
-    * [[graft.operators.TextAnalysis.lineDedupFromLines]] input). */
-  def readLineSegmentIndex(
-      spark: SparkSession, linePath: String, claimsPath: String,
-      idCol: String): DataFrame =
-    readDerivedSegments(spark, linePath, claimsPath, idCol)
-
-  def compactLineSegments(
-      spark: SparkSession, linePath: String, claimsPath: String,
-      idCol: String): Unit =
-    compactDerivedSegments(spark, linePath, claimsPath, idCol)
 
   /** Segment-append writer for the LWW row snapshot (the batch analogue of
     * the reference's per-key monitor_items merge loop,

@@ -43,35 +43,6 @@ object StreamingIngest {
       tombstone: Boolean,
       payload: Option[String])
 
-  /** Project an untyped change DataFrame into the typed event stream.
-    * `targetCol=null` (or op=DELETE) ⇒ tombstone, per table/mod.rs:912-915. */
-  def toKeyedEvents(
-      df: DataFrame,
-      pkCols: Seq[String],
-      tsCol: String,
-      seqCol: String,
-      opCol: Option[String],
-      targetCol: Option[String],
-      payloadCols: Seq[String]): Dataset[KeyedEvent] = {
-    import df.sparkSession.implicits._
-    val tomb = {
-      // coalesce: a NULL op must not three-valued-null the predicate — an
-      // event with a missing op but a live payload is an upsert, not a delete
-      val opTomb = opCol.map(c => coalesce(upper(col(c)) === "DELETE", lit(false)))
-        .getOrElse(lit(false))
-      val nullTomb = targetCol.map(c => col(c).isNull).getOrElse(lit(false))
-      opTomb || nullTomb
-    }
-    df.select(
-      to_json(struct(pkCols.map(col): _*)).as("key"),
-      col(tsCol).cast("long").as("ts"),
-      col(seqCol).cast("long").as("seq"),
-      tomb.as("tombstone"),
-      when(tomb, lit(null))
-        .otherwise(to_json(struct(payloadCols.map(col): _*))).as("payload"))
-      .as[KeyedEvent]
-  }
-
   /** The per-key LWW transition (compare_timestamps + update_index,
     * table/mod.rs:616-1003): newer ts wins; equal-ts later arrivals are
     * no-ops; pure function so batch and streaming share it. */

@@ -393,28 +393,6 @@ class ApproxAnnSpec extends SparkSpec {
     assert(got == exact)
   }
 
-  test("ivfpq adaptive: selective filter falls back to the exact scan") {
-    import graft.operators.Restriction
-    val (assigned, centroids) = ApproxAnn.buildIvfIndex(emb, "embedding", k = 16)
-    val cb = ApproxAnn.trainPqCodebooks(emb, "embedding", m = 8, k = 16)
-    val codes = ApproxAnn.pqEncode(assigned, "embedding", cb)
-      .select("vec_id", "_centroid", "_pq")
-    val tight = Restriction.Lt("vec_id", 5L) // 5 matching « limit·oversample
-    val req = AnnRequest(qv, 10, restrictions = Seq(tight), allowFiltering = true)
-    // no nprobe can hold limit·oversample matching candidates ⇒ fail
-    assert(ApproxAnn.chooseIvfProbes(codes, "_pq", req, centroids,
-      Seq(1, 2, 4, 8)).isEmpty)
-    val got = ApproxAnn.searchIvfPqAdaptive(codes, emb, "embedding",
-      Seq("vec_id"), Euclidean, req, centroids, cb)
-      .select("vec_id", "distance").as[(Long, Double)].collect().toSeq
-    val exact = Ann.plan(emb, "embedding", Seq("vec_id"), Euclidean, req)
-      .select("vec_id", "distance").as[(Long, Double)].collect().toSeq
-    assert(got == exact) // recall 1.0 in the fallback regime
-    // probing ALL cells always certifies (coverage 1.0) ⇒ pruned branch
-    assert(ApproxAnn.chooseIvfProbes(codes, "_pq",
-      AnnRequest(qv, 10, restrictions = Nil), centroids, Seq(16)) == Some(16))
-  }
-
   test("pq encode picks the true argmin codeword per subspace (property)") {
     // replays the argmin on the driver over every (row, subspace): the
     // stored code's subvector distance must be ≤ every other codeword's,

@@ -6,10 +6,12 @@ import graft.operators.{Ann, ApproxAnn, Restriction}
 import graft.operators.Ann.AnnRequest
 import org.apache.spark.sql.functions._
 
-/** Recall certification for the IVF and i8-rescoring serving backends over
-  * the SAME selectivity-bucket grid as [[LshRecallSpec]] — every pluggable
-  * [[graft.operators.Engine.AnnBackend]] now carries the same empirical
-  * recall pin, so no attach can silently trade recall for speed.
+/** Recall certification for the IVF and i8-rescoring search paths
+  * ([[graft.operators.ApproxAnn.searchIvfAdaptive]],
+  * [[graft.operators.ApproxAnn.searchRescoredIndexed]]) over the SAME
+  * selectivity-bucket grid as [[LshRecallSpec]] pins for the LSH serving
+  * path — every approximate path carries the same empirical recall pin, so
+  * none can silently trade recall for speed.
   *
   * Methodology: the reference's benchmark builds filter buckets at
   * [50,20,10,5,2,1,0.5,0.2]% selectivity and measures recall@k in each

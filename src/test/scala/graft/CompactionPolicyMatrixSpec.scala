@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{ApproxAnn, Bm25, Dedup, TextAnalysis}
+import graft.operators.{ApproxAnn, Bm25, Dedup}
 import graft.streaming.IndexMaintenance
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
@@ -9,22 +9,19 @@ import org.apache.spark.sql.functions._
 /** The compaction-policy cadence pinned PER STORE KIND (VERDICT r10 #3):
   * `withCompaction` is kind-agnostic code, but the r10 empty-fold ceiling
   * bug proved kind-generic code still has kind-specific failure modes —
-  * so every one of the nine segment kinds runs the same script here:
-  * append batches past the threshold (upserts + a delete + a rewrite
-  * crossing fold boundaries), watch the segment count sawtooth, and
-  * require the reconciled view to equal a from-scratch rebuild of the
-  * live rows AFTER folds ran mid-stream, plus one post-fold append.
+  * so every segment kind (FTS, MinHash dedup, LSH vector, LWW snapshot)
+  * runs the same script here: append batches past the threshold (upserts
+  * + a delete + a rewrite crossing fold boundaries), watch the segment
+  * count sawtooth, and require the reconciled view to equal a
+  * from-scratch rebuild of the live rows AFTER folds ran mid-stream, plus
+  * one post-fold append.
   *
-  * Eight kinds share the (id, vector, text, op) batch script; the LWW
+  * Three kinds share the (id, vector, text, op) batch script; the LWW
   * snapshot store has its own (writetime/seq) script below. */
 class CompactionPolicyMatrixSpec extends SparkSpec {
   import spark.implicits._
 
   private val dims = 4
-  private val centroids = Seq(0 -> Seq(1f, 0f, 0f, 0f), 1 -> Seq(-1f, 0f, 0f, 0f))
-  private val codebooks: ApproxAnn.PqCodebooks = Seq(
-    Seq(0 -> Seq(1f, 0f), 1 -> Seq(-1f, 0f)),
-    Seq(0 -> Seq(0f, 1f), 1 -> Seq(0f, -1f)))
   private def vecOf(seed: Long): Seq[Float] =
     Array.tabulate(dims)(d => math.sin(seed * 1.7 + d).toFloat).toSeq
   private def textOf(b: Long): String =
@@ -89,63 +86,6 @@ class CompactionPolicyMatrixSpec extends SparkSpec {
           canon(live.select(col("vec_id"), col("embedding"),
             ApproxAnn.lshBucket(col("embedding"), planes).as("_bucket")))
         })
-    },
-    "ivf" -> { dir =>
-      val ip = path(dir, "ivf")
-      val ap = IndexMaintenance.appendIvfSegment(
-        spark, ip, "vec_id", "embedding", Some("op"), centroids)
-      ((b, i) => ap(b.select(col("vec_id"), col("embedding"), col("op")), i),
-        ip,
-        () => IndexMaintenance.compactIvfSegments(spark, ip, "vec_id"),
-        () => canon(IndexMaintenance.readIvfSegmentIndex(spark, ip, "vec_id")),
-        live => canon(ApproxAnn.assignToCentroids(
-            live.select("vec_id", "embedding"), "embedding", centroids)))
-    },
-    "ivfpq" -> { dir =>
-      val ip = path(dir, "ivfpq")
-      val ap = IndexMaintenance.appendIvfPqSegment(
-        spark, ip, "vec_id", "embedding", Some("op"), centroids, codebooks)
-      ((b, i) => ap(b.select(col("vec_id"), col("embedding"), col("op")), i),
-        ip,
-        () => IndexMaintenance.compactIvfPqSegments(spark, ip, "vec_id"),
-        () => canon(IndexMaintenance.readIvfPqSegmentIndex(spark, ip, "vec_id")),
-        live => canon(ApproxAnn.pqEncode(
-            ApproxAnn.assignToCentroids(
-              live.select("vec_id", "embedding"), "embedding", centroids),
-            "embedding", codebooks)
-          .select("vec_id", "_pq", "_centroid")))
-    },
-    "pq" -> { dir =>
-      val cp = path(dir, "pq")
-      val ap = IndexMaintenance.appendPqSegment(
-        spark, cp, "vec_id", "embedding", Some("op"), codebooks)
-      ((b, i) => ap(b.select(col("vec_id"), col("embedding"), col("op")), i),
-        cp,
-        () => IndexMaintenance.compactPqSegments(spark, cp, "vec_id"),
-        () => canon(IndexMaintenance.readPqSegmentCodes(spark, cp, "vec_id")),
-        live => canon(ApproxAnn.pqEncode(
-            live.select("vec_id", "embedding"), "embedding", codebooks)
-          .select("vec_id", "_pq")))
-    },
-    "span" -> { dir =>
-      val sp = path(dir, "span"); val cp = path(dir, "spanClaims")
-      val ap = IndexMaintenance.appendSpanSegment(
-        spark, sp, cp, "vec_id", "text", Some("op"), windowLen = 3)
-      ((b, i) => ap(b.select(col("vec_id"), col("text"), col("op")), i),
-        cp,
-        () => IndexMaintenance.compactSpanSegments(spark, sp, cp, "vec_id"),
-        () => canon(IndexMaintenance.readSpanSegmentIndex(spark, sp, cp, "vec_id")),
-        live => canon(TextAnalysis.spanWindows(live, "vec_id", "text", 3)))
-    },
-    "line" -> { dir =>
-      val lp = path(dir, "line"); val cp = path(dir, "lineClaims")
-      val ap = IndexMaintenance.appendLineSegment(
-        spark, lp, cp, "vec_id", "text", Some("op"))
-      ((b, i) => ap(b.select(col("vec_id"), col("text"), col("op")), i),
-        cp,
-        () => IndexMaintenance.compactLineSegments(spark, lp, cp, "vec_id"),
-        () => canon(IndexMaintenance.readLineSegmentIndex(spark, lp, cp, "vec_id")),
-        live => canon(TextAnalysis.lineRelation(live, "vec_id", "text")))
     })
 
   private def path(dir: java.io.File, n: String) =

@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   *  - the LWW row snapshot,
   *  - the FTS postings/doc-length stores,
   *  - the LSH vector index,
-  *  - the dedup artifacts (shingle + MinHash signature stores), and
-  *  - the span-window store,
+  *  - the dedup artifacts (shingle + MinHash signature stores),
   * each as segment appends reconciled at read,
   * and after every commit the row state, BM25 search, ANN search, and
   * near-dup queries all reflect exactly the live data — the Spark analogue
@@ -47,9 +46,6 @@ class ContinuousIngestSpec extends SparkSpec {
     val appendDedup = graft.streaming.StreamingDedup.nearDupBatch(
       spark, p("shingles"), p("sigs"), p("pairs"), "doc_id", "text",
       opCol = Some("op"), threshold = 0.5)
-    val appendSpan = IndexMaintenance.appendSpanSegment(
-      spark, p("span"), p("spanClaims"), "doc_id", "text", opCol = Some("op"),
-      windowLen = 5)
 
     val mem = MemoryStream[DocEvent](spark)
     // the engine carrying the CDC observability gauges — withCdcMetrics
@@ -76,7 +72,6 @@ class ContinuousIngestSpec extends SparkSpec {
         appendFts(cur, id)
         appendVs(cur, id)
         appendDedup(cur, id)
-        appendSpan(cur, id)
       })
       .start()
     // gauge tied to THIS query's lifetime: up now, 0 after terminate
@@ -161,16 +156,6 @@ class ContinuousIngestSpec extends SparkSpec {
       val pairLog = spark.read.parquet(p("pairs"))
         .select("epoch", "id_a", "id_b").as[(Long, Long, Long)].collect().toSet
       assert(pairLog == Set((1L, 1L, 2L), (2L, 1L, 2L)), pairLog)
-
-      // the span store tracks the LWW-authoritative live rows exactly
-      val spanGot = IndexMaintenance.readSpanSegmentIndex(
-          spark, p("span"), p("spanClaims"), "doc_id")
-        .as[(Long, Long)].collect().toSet
-      val spanWant = graft.operators.TextAnalysis.spanWindows(
-          Seq((1L, fox1), (2L, fox2)).toDF("doc_id", "text"),
-          "doc_id", "text", 5)
-        .as[(Long, Long)].collect().toSet
-      assert(spanGot == spanWant)
 
       // CDC observability advanced with the stream: reader live, every
       // event counted as modified, checkpoint at the newest event time

@@ -171,7 +171,7 @@ class EngineSpec extends SparkSpec {
 
     val cfg = Engine.ApproxServing(
       ApproxAnn.buildLshIndex(df, "embedding", nbits = 8, dims = 16), nbits = 8)
-    e.setServingBackend("ks", "ann_i", Engine.LshBackend(cfg))
+    e.setApproxServing("ks", "ann_i", cfg)
     assert(e.servingBackendName("ks", "ann_i") == "lsh")
     // the adaptive probe either certifies coverage or falls back exact —
     // either way the routed answer matches the direct operator call
@@ -187,7 +187,7 @@ class EngineSpec extends SparkSpec {
     }.status == 400)
     // attach-time validation: a store without _bucket is rejected at SET
     assert(intercept[QueryException] {
-      e.setServingBackend("ks", "ann_i", Engine.LshBackend(Engine.ApproxServing(df, 8)))
+      e.setApproxServing("ks", "ann_i", Engine.ApproxServing(df, 8))
     }.status == 400)
     // detach restores the exact path
     e.clearServingBackend("ks", "ann_i")
@@ -317,9 +317,9 @@ class EngineSpec extends SparkSpec {
       e.addIndex(meta, live)
       val exact = e.ann("ks", "vseg", AnnRequest(vec(3, -1f), limit = 5))
         .select("pk", "distance").as[(Int, Double)].collect().toSeq
-      e.setServingBackend("ks", "vseg", Engine.LshBackend(Engine.ApproxServing(
+      e.setApproxServing("ks", "vseg", Engine.ApproxServing(
         IndexMaintenance.readVsSegmentIndex(spark, iPath, "pk", "embedding"),
-        nbits = 8)))
+        nbits = 8))
       assert(e.servingBackendName("ks", "vseg") == "lsh")
       val served = e.ann("ks", "vseg", AnnRequest(vec(3, -1f), limit = 5))
         .select("pk", "distance").as[(Int, Double)].collect().toSeq

@@ -107,6 +107,24 @@ class HttpShellSpec extends SparkSpec {
     } finally shell.stop()
   }
 
+  test("a body past the 2 MiB limit gets 413; the shell keeps serving") {
+    val shell = HttpShell.start(engineFixture())
+    try {
+      val ann = """{"vector": [1.0, 0.0, 0.0], "limit": 2}"""
+      // exactly at the limit: a valid request padded with whitespace
+      val atLimit = post(shell.port, "/api/v1/indexes/ks/vidx/ann",
+        ann + " " * (HttpShell.MaxBodyBytes - ann.length))
+      assert(atLimit.statusCode() == 200, atLimit.body())
+      val over = post(shell.port, "/api/v1/indexes/ks/vidx/ann",
+        "x" * (HttpShell.MaxBodyBytes + 1))
+      assert(over.statusCode() == 413, over.body())
+      assert(om.readTree(over.body()).get("status").asInt() == 413)
+      val after = post(shell.port, "/api/v1/indexes/ks/vidx/ann", ann)
+      assert(after.statusCode() == 200, after.body())
+      assert(om.readTree(after.body()).get("primary_keys").get("pk").get(0).asLong() == 3L)
+    } finally shell.stop()
+  }
+
   test("stopped shell releases the port") {
     val shell = HttpShell.start(engineFixture())
     val port = shell.port

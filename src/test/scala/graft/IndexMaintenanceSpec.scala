@@ -196,6 +196,14 @@ class IndexMaintenanceSpec extends SparkSpec {
       IndexMaintenance.compactVsSegments(spark, iPath, "vec_id")
       assert(IndexMaintenance.ftsSegmentCount(spark, iPath) == 1)
       assert(rows() == rebuilt)
+      // the fold folded into the ceiling segment 1, whose `_bucket=-1` dir
+      // (v3's tombstone) is absent from the folded frame: it must be
+      // deleted, leaving exactly the live rows' bucket dirs
+      val seg1 = new java.io.File(iPath, "_seg=1")
+      val bucketDirs = seg1.listFiles().filter(_.isDirectory).map(_.getName).toSet
+      assert(!bucketDirs("_bucket=-1"), "a folded-away tombstone cell dir survived the fold")
+      assert(bucketDirs == rebuilt.map(r => s"_bucket=${r._3}"),
+        s"ceiling segment holds $bucketDirs, not the live rows' buckets")
       append(Seq((3L, vec(3), "UPSERT")).toDF("vec_id", "embedding", "op"), 2L)
       assert(rows().map(_._1) == Set(1L, 2L, 3L))
     } finally FileUtils.deleteDirectory(dir)
@@ -257,176 +265,6 @@ class IndexMaintenanceSpec extends SparkSpec {
       appendSeg(Seq((3L, "gamma back", "UPSERT", 400L, 10L))
         .toDF("doc_id", "text", "op", "ts", "seq"), 3L)
       assert(segState().filter(!col(Lww.TombstoneCol)).count() == 4L)
-    } finally FileUtils.deleteDirectory(dir)
-  }
-
-  test("incremental IVF index: centroid moves, deletes, == fresh assignment, query correct") {
-    import graft.operators.{Ann, ApproxAnn}
-    import org.apache.commons.io.FileUtils
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_inc").toFile
-    val iPath = new java.io.File(dir, "ivf").getAbsolutePath
-    // fixed centroid metadata: two well-separated cells
-    val centroids = Seq(0 -> Seq(1f, 0f, 0f, 0f), 1 -> Seq(-1f, 0f, 0f, 0f))
-    val append = IndexMaintenance.appendIvfSegment(
-      spark, iPath, "vec_id", "embedding", opCol = Some("op"), centroids)
-    def rows(p: String): Set[(Long, Seq[Float], Int)] =
-      IndexMaintenance.readIvfSegmentIndex(spark, p, "vec_id")
-        .select(col("vec_id"), col("embedding"), col("_centroid"))
-        .as[(Long, Seq[Float], Int)].collect().toSet
-    try {
-      append(Seq(
-        (1L, Seq(0.9f, 0.1f, 0f, 0f), "UPSERT"),
-        (2L, Seq(-0.8f, 0f, 0.1f, 0f), "UPSERT"),
-        (3L, Seq(0.7f, 0f, 0f, 0.2f), "UPSERT"))
-        .toDF("vec_id", "embedding", "op"), 0L)
-      assert(rows(iPath).map(r => r._1 -> r._3).toMap == Map(1L -> 0, 2L -> 1, 3L -> 0))
-
-      // v1 flips sign → moves cells; v3 deleted
-      append(Seq(
-        (1L, Seq(-0.9f, 0.1f, 0f, 0f), "UPSERT"),
-        (3L, null.asInstanceOf[Seq[Float]], "DELETE"))
-        .toDF("vec_id", "embedding", "op"), 1L)
-
-      val live = Seq((1L, Seq(-0.9f, 0.1f, 0f, 0f)), (2L, Seq(-0.8f, 0f, 0.1f, 0f)))
-        .toDF("vec_id", "embedding")
-      val reassigned = ApproxAnn.assignToCentroids(live, "embedding", centroids)
-        .select(col("vec_id"), col("embedding"), col("_centroid"))
-        .as[(Long, Seq[Float], Int)].collect().toSet
-      assert(rows(iPath) == reassigned,
-        "maintained IVF index must equal fresh assignment of the live rows")
-
-      // served query over the reconciled store sees only live vectors: v1's
-      // stale copy in cell 0 and v3's tombstone never surface
-      val got = ApproxAnn.searchIvf(
-          IndexMaintenance.readIvfSegmentIndex(spark, iPath, "vec_id"), "embedding",
-          Seq("vec_id"), graft.functions.VectorFunctions.Euclidean,
-          Ann.AnnRequest(Seq(-1f, 0f, 0f, 0f), limit = 5), centroids, nprobe = 1)
-        .select("vec_id").as[Long].collect().toSet
-      assert(got == Set(1L, 2L))
-    } finally FileUtils.deleteDirectory(dir)
-  }
-
-  test("segment-append IVF/IVFADC/PQ/span/line stores: == full rebuild, compaction") {
-    import graft.operators.{ApproxAnn, TextAnalysis}
-    import org.apache.commons.io.FileUtils
-    val dir = java.nio.file.Files.createTempDirectory("graft_cell_seg").toFile
-    def p(n: String) = new java.io.File(dir, n).getAbsolutePath
-    val centroids = Seq(0 -> Seq(1f, 0f, 0f, 0f), 1 -> Seq(-1f, 0f, 0f, 0f))
-    val codebooks: ApproxAnn.PqCodebooks = Seq(
-      Seq(0 -> Seq(1f, 0f), 1 -> Seq(-1f, 0f)),
-      Seq(0 -> Seq(0f, 1f), 1 -> Seq(0f, -1f)))
-    val aIvf = IndexMaintenance.appendIvfSegment(
-      spark, p("ivf"), "vec_id", "embedding", Some("op"), centroids)
-    val aIvfPq = IndexMaintenance.appendIvfPqSegment(
-      spark, p("ivfpq"), "vec_id", "embedding", Some("op"), centroids, codebooks)
-    val aPq = IndexMaintenance.appendPqSegment(
-      spark, p("pq"), "vec_id", "embedding", Some("op"), codebooks)
-    val aSpan = IndexMaintenance.appendSpanSegment(
-      spark, p("span"), p("spanClaims"), "vec_id", "text", Some("op"), windowLen = 3)
-    val aLine = IndexMaintenance.appendLineSegment(
-      spark, p("line"), p("lineClaims"), "vec_id", "text", Some("op"))
-    def b(rows: Seq[(Long, Seq[Float], String, String)]) =
-      rows.toDF("vec_id", "embedding", "text", "op")
-    def all(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
-      Seq(aIvf, aIvfPq, aPq, aSpan, aLine).foreach(_(batch, id))
-    try {
-      all(b(Seq(
-        (1L, Seq(0.9f, 0.2f, 0f, 0.5f), "one two three four five", "UPSERT"),
-        (2L, Seq(-0.8f, -0.3f, 0.1f, 0f), "six seven eight nine", "UPSERT"),
-        (3L, Seq(0.7f, 0f, -0.2f, 0.1f), "one two three four six", "UPSERT"))), 0L)
-      // v1 flips sign (moves IVF cell, changes codes), v3 deleted
-      all(b(Seq(
-        (1L, Seq(-0.9f, 0.2f, 0f, -0.5f), "one two three four five", "UPSERT"),
-        (3L, null, null, "DELETE"))), 1L)
-
-      val live = Seq(
-        (1L, Seq(-0.9f, 0.2f, 0f, -0.5f), "one two three four five"),
-        (2L, Seq(-0.8f, -0.3f, 0.1f, 0f), "six seven eight nine"))
-        .toDF("vec_id", "embedding", "text")
-      def ivfGot() = IndexMaintenance.readIvfSegmentIndex(spark, p("ivf"), "vec_id")
-        .select("vec_id", "embedding", "_centroid")
-        .as[(Long, Seq[Float], Int)].collect().toSet
-      val ivfWant = ApproxAnn.assignToCentroids(live, "embedding", centroids)
-        .select("vec_id", "embedding", "_centroid")
-        .as[(Long, Seq[Float], Int)].collect().toSet
-      assert(ivfGot() == ivfWant, "IVF reconcile must equal fresh assignment")
-      def ipqGot() = IndexMaintenance.readIvfPqSegmentIndex(spark, p("ivfpq"), "vec_id")
-        .select("vec_id", "_pq", "_centroid").as[(Long, Seq[Int], Int)].collect().toSet
-      val ipqWant = ApproxAnn.pqEncode(
-          ApproxAnn.assignToCentroids(live, "embedding", centroids),
-          "embedding", codebooks)
-        .select("vec_id", "_pq", "_centroid").as[(Long, Seq[Int], Int)].collect().toSet
-      assert(ipqGot() == ipqWant)
-      assert(ipqGot().forall(_._3 == 1)) // both live vectors now in cell 1
-      def pqGot() = IndexMaintenance.readPqSegmentCodes(spark, p("pq"), "vec_id")
-        .as[(Long, Seq[Int])].collect().toSet
-      val pqWant = ApproxAnn.pqEncode(live, "embedding", codebooks)
-        .select("vec_id", "_pq").as[(Long, Seq[Int])].collect().toSet
-      assert(pqGot() == pqWant)
-      def spanGot() = IndexMaintenance.readSpanSegmentIndex(
-          spark, p("span"), p("spanClaims"), "vec_id")
-        .as[(Long, Long)].collect().toSet
-      val spanWant = TextAnalysis.spanWindows(live, "vec_id", "text", 3)
-        .as[(Long, Long)].collect().toSet
-      assert(spanGot() == spanWant)
-      def lineGot() = IndexMaintenance.readLineSegmentIndex(
-          spark, p("line"), p("lineClaims"), "vec_id")
-        .as[(Long, Long, Long)].collect().toSet
-      val lineWant = TextAnalysis.lineRelation(live, "vec_id", "text")
-        .as[(Long, Long, Long)].collect().toSet
-      assert(lineGot() == lineWant)
-
-      // compact every store: views unchanged, one segment each
-      IndexMaintenance.compactIvfSegments(spark, p("ivf"), "vec_id")
-      IndexMaintenance.compactIvfPqSegments(spark, p("ivfpq"), "vec_id")
-      IndexMaintenance.compactPqSegments(spark, p("pq"), "vec_id")
-      IndexMaintenance.compactSpanSegments(spark, p("span"), p("spanClaims"), "vec_id")
-      IndexMaintenance.compactLineSegments(spark, p("line"), p("lineClaims"), "vec_id")
-      assert(ivfGot() == ivfWant && ipqGot() == ipqWant && pqGot() == pqWant)
-      assert(spanGot() == spanWant && lineGot() == lineWant)
-      Seq(p("ivf"), p("ivfpq"), p("pq"), p("spanClaims"), p("lineClaims")).foreach { path =>
-        assert(IndexMaintenance.ftsSegmentCount(spark, path) == 1, path)
-      }
-      // still appendable above the compacted ceiling
-      all(b(Seq((3L, Seq(0.7f, 0f, -0.2f, 0.1f), "one two three four six", "UPSERT"))), 2L)
-      assert(ivfGot().map(_._1) == Set(1L, 2L, 3L))
-      assert(lineGot().map(_._1) == Set(1L, 2L, 3L))
-    } finally FileUtils.deleteDirectory(dir)
-  }
-
-  test("incremental line store: == full rebuild; served lineDedup correct") {
-    import graft.operators.TextAnalysis
-    import org.apache.commons.io.FileUtils
-    val dir = java.nio.file.Files.createTempDirectory("graft_line_inc").toFile
-    val path = new java.io.File(dir, "lines").getAbsolutePath
-    val claims = new java.io.File(dir, "claims").getAbsolutePath
-    val append = IndexMaintenance.appendLineSegment(
-      spark, path, claims, "doc_id", "text", Some("op"))
-    def lines() = IndexMaintenance.readLineSegmentIndex(spark, path, claims, "doc_id")
-    try {
-      append(Seq(
-        (1L, "banner\nalpha one", "UPSERT"),
-        (2L, "banner\nbeta two", "UPSERT"),
-        (3L, "gone soon\nbanner", "UPSERT")).toDF("doc_id", "text", "op"), 0L)
-      // doc 1 rewritten (drops the banner), doc 3 deleted
-      append(Seq(
-        (1L, "alpha one\nnew line", "UPSERT"),
-        (3L, null, "DELETE")).toDF("doc_id", "text", "op"), 1L)
-      val live = Seq(
-        (1L, "alpha one\nnew line"),
-        (2L, "banner\nbeta two")).toDF("doc_id", "text")
-      val got = lines().as[(Long, Int, Long)].collect().toSet
-      val want = TextAnalysis.lineRelation(live, "doc_id", "text")
-        .as[(Long, Int, Long)].collect().toSet
-      assert(got == want)
-      // served query == direct operator on the live corpus ("banner" now
-      // appears in only one live doc, so nothing dedups)
-      val served = TextAnalysis.lineDedupFromLines(lines(), live, "doc_id", "text")
-        .select("doc_id", "clean_text").as[(Long, String)].collect().toMap
-      val direct = TextAnalysis.lineDedup(live, "doc_id", "text")
-        .select("doc_id", "clean_text").as[(Long, String)].collect().toMap
-      assert(served == direct)
-      assert(served(2L) == "banner\nbeta two")
     } finally FileUtils.deleteDirectory(dir)
   }
 
