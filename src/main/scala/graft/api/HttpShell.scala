@@ -39,7 +39,7 @@ object HttpShell {
   /** The largest request body the shell reads: 2 MiB, the default body
     * limit of axum, the reference's HTTP layer. A longer body is answered
     * 413 after reading one byte past the limit, so no request buffers more
-    * than that on the serving driver. */
+    * than that in the serving JVM. */
   val MaxBodyBytes: Int = 2 * 1024 * 1024
 
   final case class Server(underlying: HttpServer,
